@@ -50,18 +50,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** @param aqe default on (the library default everywhere; the catalog
-    *   section always measures it). The ER section, by contrast, measures
-    *   the STATIC-PLAN CONFIGURATION by default — AQE off +
-    *   `runOnTable(staticPlan = true)`'s declared broadcast — which is an
-    *   opt-in API surface, not the library default; the artifact labels
-    *   this in its `er_config` field. `SPARK_GRAFT_ER_AQE=1` measures the
-    *   AQE-on library default instead (r03 measured it ~0.01 lower on the
-    *   1-vs-4 ratio, BENCH.md "AQE off for the ER sessions").
-    *   `SPARK_GRAFT_ER_FAST=1` additionally measures the lean-memory
-    *   fast-flags variant (faster absolute, lower ratio — BENCH.md
-    *   "fast-flags variant"). */
-  private def session(cores: Int, shufflePartitions: Int, aqe: Boolean = true): SparkSession = {
+  private def session(cores: Int, shufflePartitions: Int): SparkSession = {
     val s = SparkSession.builder()
       .withExtensions(new graft.functions.expressions.GraftExtensions)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
@@ -69,7 +58,7 @@ object Bench {
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.default.parallelism", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", aqe.toString)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // BENCH_r04 (driver) died rc=1 when a Hadoop VECTORED parquet read
@@ -85,22 +74,10 @@ object Bench {
     s
   }
 
-  // ER-section variants (BENCH.md): the measured ER configuration is the
-  // STATIC PLAN — AQE off + the broadcast the pipeline declares via
-  // runOnTable(staticPlan = true) — chosen because the pipeline's plan is
-  // static by construction (pre-salted uniform pairs, fixed partitioning,
-  // one known-broadcastable join). This is an opt-in API configuration,
-  // NOT the library default (AQE on, no hint): the artifact says so in
-  // er_config rather than claiming otherwise (ADVICE r03). SPARK_GRAFT_
-  // ER_AQE=1 measures the AQE-on library default; SPARK_GRAFT_ER_FAST=1
-  // additionally turns on the lean-memory fast flags (faster absolute,
-  // lower 1-vs-4 ratio).
-  private def erFast = sys.env.get("SPARK_GRAFT_ER_FAST").contains("1")
-  private def erAqeOff = !sys.env.get("SPARK_GRAFT_ER_AQE").contains("1")
-
+  /** One ER pass: the in-memory stage chain under the library defaults
+    * (AQE on, no plan hints). */
   private def erPass(spark: SparkSession, corpusPath: String): (Long, Double) =
-    graft.pipeline.EntityResolution.runOnTable(spark, corpusPath,
-      staticPlan = erAqeOff, lean = erFast)
+    graft.pipeline.EntityResolution.runOnTable(spark, corpusPath)
 
   /** Sum of executor task runtime (ms) across a thunk — the per-level CPU
     * cost of the identical computation. taskSum_low vs taskSum_high/1
@@ -283,7 +260,7 @@ object Bench {
     def runErScaling(clusters: Long, nRounds: Int): String = {
       // materialize the corpus once (north rule: the pipeline READS a table)
       val corpusDir = graft.util.Scratch.unique("bench_corpus") + "/webpages"
-      val setup = session(16, 48, aqe = !erAqeOff)
+      val setup = session(16, 48)
       graft.sources.WebPagesGen.webpages(setup, clusters)
         .repartition(48).write.mode("overwrite").parquet(corpusDir)
       // JIT warmup: a first ER pass pays ~5x in C2 compilation + codegen
@@ -297,7 +274,7 @@ object Bench {
       // survive a pass; JIT-compiled code is JVM-wide and does survive, so
       // every pass after the warmup runs warm code on a cold block manager
       def onePass(cores: Int): (Long, Double, Double) = {
-        val spark = session(cores, partitions, aqe = !erAqeOff)
+        val spark = session(cores, partitions)
         val clock = new TaskClock(spark.sparkContext)
         try {
           val (docs, sec) = erPass(spark, corpusDir)
@@ -340,16 +317,8 @@ object Bench {
       val inflMin = taskHigh.min / taskLow.min
       val effEngine = math.min(1.0, efficiency * inflMin)
       def arr(xs: Seq[Double]) = xs.map(x => f"$x%.2f").mkString("[", ",", "]")
-      // er_config note derived from the ACTUAL flags (ADVICE r04: a
-      // hardcoded static-plan note appeared verbatim in an AQE-on
-      // artifact, self-contradicting the aqe:true field next to it)
-      val note =
-        (if (erAqeOff)
-           "static-plan configuration (opt-in API), not the AQE-on library default; SPARK_GRAFT_ER_AQE=1 measures the default"
-         else "AQE-on library default (SPARK_GRAFT_ER_AQE=1)") +
-          (if (erFast) "; lean-memory fast flags (SPARK_GRAFT_ER_FAST=1)" else "")
       f"""{"clusters":$clusters,"docs":$docsHigh,""" +
-        f""""er_config":{"aqe":${!erAqeOff},"static_plan":$erAqeOff,"lean":$erFast,"note":"$note"},""" +
+        """"er_config":{"aqe":true,"static_plan":false,"lean":false,"note":"AQE-on library default"},""" +
         f""""scaling":{"protocol":"interleaved-fresh-session","cores_low":$coresLow,"cores_high":$coresHigh,""" +
         f""""partitions":$partitions,"sec_low":$secLow%.2f,"sec_high":$secHigh%.2f,""" +
         f""""passes_low":${arr(rawLow)},"passes_high":${arr(rawHigh)},""" +
@@ -474,14 +443,14 @@ object Bench {
       // setup/warmup at the MEASURED width (ADVICE r05: a hardcoded
       // session(16,48) warmed a different width/partitioning than the
       // measured passes when SPARK_GRAFT_ER_CORES_16X overrides)
-      val setup = session(cores16, parts16, aqe = !erAqeOff)
+      val setup = session(cores16, parts16)
       graft.sources.WebPagesGen.webpages(setup, clusters16)
         .repartition(48).write.mode("overwrite").parquet(corpusDir)
       erPass(setup, corpusDir) // unmeasured warmup (first-touch on THIS corpus)
       setup.stop(); System.gc()
       val passes = (1 to 2).map { _ =>
         awaitQuiet(maxBusy, waitBudget)
-        val spark = session(cores16, parts16, aqe = !erAqeOff)
+        val spark = session(cores16, parts16)
         try erPass(spark, corpusDir)
         finally { spark.stop(); System.gc() }
       }

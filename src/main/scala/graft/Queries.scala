@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.{Hashing, OracleHash, Similarity}
 import graft.operators.Blocking
+import graft.pipeline.EntityResolution
 
 /** The driver-facing operator catalog: one named query per implemented
   * operator family from SURVEY.md §2, each with a DuckDB oracle (same
@@ -686,32 +687,18 @@ object Queries {
     // one-partition-per-N-MB sizing a 100-TB run would use — at 96 the
     // query's wall time was dominated by scheduling near-empty tasks
     val pages = graft.sources.WebPagesGen.webpages(s, Q29Clusters, numPartitions = 8)
-    val extracted = graft.pipeline.EntityResolution.extract(s, pages)
-    // feats feeds FIVE distinct plan subtrees below (blocks, both scoring
-    // sides, CC vertices, the final url join) — materialize once so each
-    // subtree re-reads ~300 tiny rows instead of re-running
-    // generate→extract→tokenize→sketch. r07: the materialization moved
-    // from session-temp parquet to localCheckpoint (the q25/q28 idiom) —
-    // same lineage truncation, no disk write+read roundtrip inside the
-    // timed query.
-    val feats = graft.operators.Blocking.features(s, extracted)
-      .toDF().localCheckpoint()
-      .as[graft.operators.Blocking.DocFeatures]
-    val blocks = graft.operators.Blocking.blockEntries(s, feats)
-    val pairs =
-      graft.operators.Blocking.candidatePairs(s, blocks, persistSizes = false).pairs
-    val scored = graft.operators.PairScoring.score(s, pairs, feats)
-    val edges = scored.where(col("isDuplicate"))
-      .select(col("src"), col("dst")).as[graft.model.Edge]
-    val assigned = graft.operators.ConnectedComponents.assign(
-      s, edges, feats.select(col("id")), dedupEdges = false)
-    feats.select(col("id"), col("url")).join(assigned, "id")
-      .withColumn("canonical", min("url").over(Window.partitionBy("comp")))
-      .select(col("url"), col("canonical"))
-      .orderBy("url")
+    // the ER stage chain, in memory: its blocks are released once the
+    // assignment is collected, so the result holds no storage of its own
+    val assigned = EntityResolution.run(s, pages, EntityResolution.InMemory)(
+      _.select(col("url"), col("cluster")).as[(String, Long)].collect())
+    val canonical = assigned.groupBy(_._2).values.flatMap { members =>
+      val minUrl = members.map(_._1).min
+      members.map { case (url, _) => (url, minUrl) }
+    }
+    canonical.toSeq.toDF("url", "canonical").orderBy("url")
   }
 
-  private val Q29Clusters = 150L
+  private[graft] val Q29Clusters = 150L
 
   private lazy val q29Sql = {
     import graft.sources.WebPagesGen

@@ -376,8 +376,7 @@ object TextFunctions {
     * Zipf-weighted residue 0.129, pinned in PropertySpec).
     * Ideographs OUTSIDE that table pass through (full unidecode carries a
     * ~20k-entry table) — the passthrough stays OBSERVABLE via
-    * `foldResidue`, surfaced per-corpus by `tools.Profile` and asserted in
-    * PropertySpec. The corpus and goldens exercise the covered ranges
+    * `foldResidue`, asserted in PropertySpec. The corpus and goldens exercise the covered ranges
     * (SURVEY §7). */
   def asciiFold(s: String): String = {
     if (s == null) return null
@@ -443,9 +442,8 @@ object TextFunctions {
     * (Latin/NFD, Greek, Cyrillic, Arabic, Hebrew, Hangul, basic
     * Devanagari; CJK ideographs and anything else pass through where the
     * reference's unidecode transliterates totally,
-    * /root/reference/src/db.py:12-13). Surfaced per-corpus by
-    * `tools.Profile` so silent mis-normalization is measurable, not
-    * invisible. */
+    * /root/reference/src/db.py:12-13). Summed over a corpus, it makes
+    * silent mis-normalization measurable, not invisible. */
   def foldResidue(s: String): Int = {
     if (s == null) return 0
     val folded = asciiFold(s)

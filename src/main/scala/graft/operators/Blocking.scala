@@ -129,8 +129,8 @@ object Blocking {
     * its weight is over-stated by at most log((n+1)/2); dropped tokens are
     * the Zipf tail, so the cosine perturbation is bounded by the tail's
     * share of vector mass — negligible while K covers the head. The
-    * truncated-token count is reported via `onTruncation` (Profile prints
-    * it) and stderr.
+    * truncated-token count is reported via `onTruncation` (the traced
+    * benchmark records it as `idf_truncated`) and stderr.
     *
     * `docs` is scanned twice (a cheap tokenize-only df pass, then the full
     * sketching pass) — callers should hand in a cached or snapshot-backed
@@ -269,29 +269,19 @@ object Blocking {
     * de-duplicated across keys (one scoring per pair regardless of how
     * many keys co-locate it) and salted-repartitioned by pair hash so the
     * scoring stage is skew-free by construction. */
-  /** @param broadcastSizes hint the block-size histogram to broadcast in
-    *   the eligibility join. Under AQE the same decision is made at
-    *   runtime from the histogram's actual size (one block-count row per
-    *   distinct key — a few MB up to ~100M-doc corpora), which is the
-    *   right default: at 10^12-doc scale the histogram outgrows any
-    *   broadcast budget and must shuffle. Set true only when the plan is
-    *   static (AQE off) AND the corpus is known to be broadcast-sized —
-    *   without it a static plan falls back to shuffling every block entry
-    *   through a sort-merge join. */
   def candidatePairs(
       spark: SparkSession,
       entries: Dataset[BlockEntry],
       maxBlockSize: Int = DefaultMaxBlockSize,
-      persistSizes: Boolean = true,
-      broadcastSizes: Boolean = false): CandidatePairGen = {
+      persistSizes: Boolean = true): CandidatePairGen = {
     import spark.implicits._
     val sizesBase = entries.groupBy("key").agg(count(lit(1)).as("sz"))
     // persistSizes=true shares one computation of the block histogram
     // between the pair join and the hot-block counter; the caller MUST
     // call `release()` (try/finally) once pairs have materialized.
-    // Callers that never force the counter and run the pairs lazily
-    // (catalog queries) should pass false and pay one histogram recompute
-    // instead of managing a cache entry.
+    // Callers that never force the counter (the in-memory ER chain, q25)
+    // should pass false and pay one histogram recompute instead of
+    // managing a cache entry.
     val sizes =
       if (persistSizes)
         sizesBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -303,8 +293,7 @@ object Blocking {
       }
     val hotBlocks = () => sizes.where(col("sz") > maxBlockSize).count()
     val eligibleSizes = sizes.where(col("sz") >= 2 && col("sz") <= maxBlockSize)
-    val eligible = entries.join(
-      if (broadcastSizes) broadcast(eligibleSizes) else eligibleSizes, "key")
+    val eligible = entries.join(eligibleSizes, "key")
       .select(col("key"), col("id")).as[BlockEntry]
     val pairs = eligible
       .groupByKey(_.key)

@@ -1,7 +1,10 @@
 package graft.pipeline
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.HtmlExtract
 import graft.model.{Edge, LabeledPair, WebPage}
@@ -9,23 +12,44 @@ import graft.operators.{Blocking, ConnectedComponents, PairScoring}
 import graft.operators.Blocking.ExtractedDoc
 import graft.sources.{SnapshotStore, WebPagesGen}
 
-/** The end-to-end record-linkage pipeline (north rule):
+/** The end-to-end record-linkage pipeline (north rule), composed ONCE as a
+  * chain of stages:
   *
   *   webpages → extract (byte-identical text per url) → features
   *   (normalize + TF-IDF + MinHash) → blocking keys → candidate pairs
-  *   (stop-block cap + salted repartition) → batched pairwise scoring →
-  *   duplicate edges → large-star/small-star transitive clustering →
-  *   cluster assignments + pairwise-F1 vs labeled pairs.
+  *   (stop-block cap + pair-hash repartition) → batched pairwise scoring →
+  *   duplicate edges → large-star/small-star connected components →
+  *   cluster assignments (url, id, cluster).
   *
-  * Every stage commits a SnapshotStore snapshot (per-partition lineage rows
-  * + counters) and is resumable: rerunning with the same outDir replays
-  * committed stages and recomputes only uncommitted ones.
+  * The operators own the stage logic; where each stage's output lives is
+  * the [[Materialization]] policy a run picks:
+  *  - [[Snapshot]] commits every stage through `SnapshotStore.getOrCreate`
+  *    (per-partition lineage rows + counters), so a run is resumable:
+  *    rerunning with the same store replays committed stages and
+  *    recomputes only uncommitted ones. The block-size histogram is
+  *    persisted while the pairs commit and the hot-block counter (forced
+  *    after the commit) share it, then released.
+  *  - [[InMemory]] keeps nothing durable. It persists only the stages read
+  *    more than once — `extracted` (read twice by features) and `features`
+  *    (read by five plan subtrees) — and releases them and the last
+  *    connected-components round once the caller's action returns.
+  *
+  * Both policies skip CC's defensive edge `distinct`: scored edges are
+  * unique (src, dst) by construction (candidate pairs are de-duplicated and
+  * scoring is 1:1).
   */
 object EntityResolution {
 
   final case class F1Report(
       tp: Long, fp: Long, fn: Long,
       precision: Double, recall: Double, f1: Double)
+
+  /** Where the chain's stage outputs live. */
+  sealed trait Materialization
+  /** Every stage is a resumable snapshot in `store`. */
+  final case class Snapshot(store: SnapshotStore) extends Materialization
+  /** Shared stages are persisted for one consuming action, then released. */
+  case object InMemory extends Materialization
 
   /** Extraction stage: recompute text from html (the invariant surface) and
     * keep (id, url, title, text, lang). Map-only; no shuffle. */
@@ -42,57 +66,65 @@ object EntityResolution {
     }
   }
 
-  /** Run all stages against an existing webpages table. Returns the cluster
-    * assignment table (url, id, cluster). */
-  def resolve(spark: SparkSession, store: SnapshotStore, pages: Dataset[WebPage]): DataFrame = {
+  /** Run the stage chain over `pages` under `policy` and hand the cluster
+    * assignment (url, id, cluster) to `consume`. Every storage block the
+    * chain holds is released (blocking) once `consume` returns or throws,
+    * so repeated runs in one session leave no persisted RDD behind. */
+  def run[T](spark: SparkSession, pages: Dataset[WebPage], policy: Materialization)(
+      consume: DataFrame => T): T = {
     import spark.implicits._
-    val extracted = store.getOrCreate("extracted")(extract(spark, pages).toDF())
-      .as[ExtractedDoc]
-    val feats = store.getOrCreate("features")(
-      Blocking.features(spark, extracted).toDF())
-      .as[Blocking.DocFeatures]
-    val blocks = store.getOrCreate("blocks")(
-      Blocking.blockEntries(spark, feats).toDF())
-      .as[Blocking.BlockEntry]
-    // the hot-block counter is forced AFTER the pairs snapshot commit so the
-    // cached block histogram serves both the pair join and the counter; the
-    // histogram is then released deterministically (blocking unpersist) in
-    // the finally — no storage block outlives the stage regardless of
-    // which path (fresh run / resume / failure) executes
-    var gen: Option[Blocking.CandidatePairGen] = None
-    val pairs =
-      try {
-        val committed = store.getOrCreate("pairs") {
-          val g = Blocking.candidatePairs(spark, blocks)
-          gen = Some(g)
-          g.pairs.toDF()
-        }.as[Blocking.CandidatePair]
-        gen.map(_.hotBlocks()).filter(_ > 0).foreach(n =>
-          System.err.println(s"[graft] dropped $n hot blocks over cap"))
-        committed
-      } finally gen.foreach(_.release())
-    val scored = store.getOrCreate("scored")(
-      PairScoring.score(spark, pairs, feats).toDF())
-    val edges = scored.where(col("isDuplicate"))
-      .select(col("src"), col("dst")).as[Edge]
-    // assignManaged: the snapshot commit below is the single
-    // materialization (SnapshotStore writes its own parquet table), so
-    // assign()'s internal decoupling roundtrip would be a redundant
-    // second write; the checkpoint is released once the commit returns
-    var relCC: () => Unit = () => ()
-    val assignments =
-      try store.getOrCreate("clusters") {
-        val vertices = feats.select(col("id"))
-        // scored-pair edges are unique (src,dst) by construction
-        val (assigned, rel) = ConnectedComponents.assignManaged(
-          spark, edges, vertices, dedupEdges = false)
-        relCC = rel
+    val committing = policy.isInstanceOf[Snapshot]
+    val held = ArrayBuffer.empty[() => Unit]
+    def stage(name: String, shared: Boolean = false)(compute: => DataFrame): DataFrame =
+      policy match {
+        case Snapshot(store) => store.getOrCreate(name)(compute)
+        case InMemory if shared =>
+          val df = compute.persist(StorageLevel.MEMORY_AND_DISK)
+          held += (() => { df.unpersist(blocking = true); () })
+          df
+        case InMemory => compute
+      }
+    try {
+      val extracted = stage("extracted", shared = true)(
+        extract(spark, pages).toDF()).as[ExtractedDoc]
+      val feats = stage("features", shared = true)(
+        Blocking.features(spark, extracted).toDF()).as[Blocking.DocFeatures]
+      val blocks = stage("blocks")(
+        Blocking.blockEntries(spark, feats).toDF()).as[Blocking.BlockEntry]
+      var gen: Option[Blocking.CandidatePairGen] = None
+      val pairs = stage("pairs") {
+        val g = Blocking.candidatePairs(spark, blocks, persistSizes = committing)
+        gen = Some(g)
+        held += g.release
+        g.pairs.toDF()
+      }.as[Blocking.CandidatePair]
+      // forced after the pairs commit, so the persisted histogram serves
+      // both the pair join and the counter; released right after
+      if (committing) gen.foreach { g =>
+        val hot = g.hotBlocks()
+        if (hot > 0) System.err.println(s"[graft] dropped $hot hot blocks over cap")
+        g.release()
+      }
+      val scored = stage("scored")(PairScoring.score(spark, pairs, feats).toDF())
+      val edges = scored.where(col("isDuplicate"))
+        .select(col("src"), col("dst")).as[Edge]
+      val clusters = stage("clusters") {
+        val (assigned, release) = ConnectedComponents.assignManaged(
+          spark, edges, feats.select(col("id")), dedupEdges = false)
+        held += release
         feats.select(col("id"), col("url"))
           .join(assigned, "id")
           .select(col("url"), col("id"), col("comp").as("cluster"))
-      } finally relCC()
-    assignments
+      }
+      consume(clusters)
+    } finally held.reverseIterator.foreach(_())
   }
+
+  /** Run all stages against an existing webpages table, committing each to
+    * `store`. Returns the committed cluster assignment table (url, id,
+    * cluster). */
+  def resolve(spark: SparkSession, store: SnapshotStore, pages: Dataset[WebPage]): DataFrame =
+    run(spark, pages, Snapshot(store))(identity)
 
   /** Pairwise F1 of predicted same-cluster vs labeled pairs (the metric in
     * BASELINE.json): a labeled pair is predicted duplicate iff both urls
@@ -119,77 +151,15 @@ object EntityResolution {
     F1Report(tp, fp, fn, precision, recall, f1)
   }
 
-  /** One store-free pipeline pass over a freshly generated corpus (JIT
-    * warmup / probe unit): returns (docs clustered, seconds). */
-  def runOnce(spark: SparkSession, nClusters: Long): (Long, Double) = {
-    import spark.implicits._
-    runOnPages(spark, WebPagesGen.webpages(spark, nClusters))
-  }
-
-  /** One pipeline pass over an EXISTING webpages table — the north rule's
+  /** One in-memory pass over an EXISTING webpages table — the north rule's
     * unit of work (read table → extract → features → block → pair → score →
-    * cluster) and the scaling-bench measurement unit: corpus generation is
+    * cluster) and the scaling bench's measured unit: corpus generation is
     * benchmark scaffolding, not pipeline work, so it happens once outside
     * the timed region. Returns (docs clustered, seconds). */
-  /** @param staticPlan the session runs this pipeline with AQE disabled
-    *   and the corpus is known broadcast-sized: declare the one decision
-    *   AQE was making (broadcast the block-histogram eligibility join)
-    *   explicitly. Without the hint an AQE-off session falls back to
-    *   shuffling every block entry through a sort-merge join.
-    * @param lean specialized memory flags: Kryo-serialized caches, no
-    *   histogram persist, no defensive edge dedup. Measured faster at
-    *   every core count than the defaults (BENCH.md "fast-flags
-    *   variant"); default false. NOTE the shipped scaling artifact
-    *   measures `staticPlan = true` with AQE off — the static-plan
-    *   configuration, labeled as such in its `er_config` field — not
-    *   these API defaults. */
-  def runOnTable(
-      spark: SparkSession, path: String, staticPlan: Boolean = false,
-      lean: Boolean = false): (Long, Double) = {
-    import spark.implicits._
-    runOnPages(spark, spark.read.parquet(path).as[WebPage], staticPlan, lean)
-  }
-
-  private def runOnPages(
-      spark: SparkSession, pages: Dataset[WebPage],
-      staticPlan: Boolean = false, lean: Boolean = false): (Long, Double) = {
-    import org.apache.spark.storage.StorageLevel
+  def runOnTable(spark: SparkSession, path: String): (Long, Double) = {
     import spark.implicits._
     val t0 = System.nanoTime()
-    // Library-default configuration unless the caller opts into the
-    // specialized flags (see runOnTable scaladoc + BENCH.md "fast-flags
-    // variant"). The shipped scaling artifact opts into staticPlan
-    // (AQE off + declared broadcast) and says so in er_config.
-    val level =
-      if (lean) StorageLevel.MEMORY_AND_DISK_SER else StorageLevel.MEMORY_AND_DISK
-    val extracted = extract(spark, pages).persist(level)
-    val feats = Blocking.features(spark, extracted).persist(level)
-    val blocks = Blocking.blockEntries(spark, feats)
-    val gen = Blocking.candidatePairs(spark, blocks, persistSizes = !lean,
-      broadcastSizes = staticPlan)
-    var relCC: () => Unit = () => ()
-    val docs =
-      try {
-        val scored = PairScoring.score(spark, gen.pairs, feats)
-        val edges = scored.where(col("isDuplicate"))
-          .select(col("src"), col("dst")).as[Edge]
-        // managed variant: the count below is the single materialization,
-        // so the parquet decoupling roundtrip of assign() buys nothing —
-        // the checkpoint is released in the finally instead
-        val (assigned, rel) = ConnectedComponents.assignManaged(
-          spark, edges, feats.select(col("id")), dedupEdges = !lean)
-        relCC = rel
-        assigned.count()
-      } finally {
-        // deterministic, BLOCKING cleanup: a repeated-pass session must end
-        // each pass with zero surviving storage blocks (asserted in
-        // EntityResolutionSpec) — cleanup coupled to GC or to an optional
-        // counter thunk is exactly the leak shape of degrading bench passes
-        relCC()
-        gen.release()
-        feats.unpersist(blocking = true)
-        extracted.unpersist(blocking = true)
-      }
+    val docs = run(spark, spark.read.parquet(path).as[WebPage], InMemory)(_.count())
     (docs, (System.nanoTime() - t0) / 1e9)
   }
 

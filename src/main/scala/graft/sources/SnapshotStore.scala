@@ -14,6 +14,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * manifest is written last; a stage without `_MANIFEST.json` is considered
   * uncommitted and is recomputed — which is what makes every stage
   * resumable after a mid-stage kill (north rule).
+  *
+  * Limits of that contract:
+  *  - the manifest appears atomically only where `rename` is atomic: the
+  *    local filesystem and HDFS, not S3A (whose rename is copy + delete);
+  *  - overwriting a committed stage deletes the old manifest before the
+  *    new one is renamed into place, so in that window the stage reads as
+  *    uncommitted.
   */
 final class SnapshotStore(spark: SparkSession, root: String) {
 

@@ -12,7 +12,9 @@ object ParquetMeta {
 
   /** Exact total row count of a parquet table from its file footers.
     * Falls back to a distributed `count()` if any footer is unreadable —
-    * sizing must never fail a query over a metadata hiccup. */
+    * sizing must never fail a query over a metadata hiccup — and when the
+    * directory holds no flat `*.parquet` file (a partitioned or nested
+    * table), whose rows the footer listing cannot see. */
   def rowCount(spark: SparkSession, dir: String): Long = {
     try {
       val p = new Path(dir)
@@ -21,7 +23,8 @@ object ParquetMeta {
         val n = st.getPath.getName
         st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
       }
-      files.map { st =>
+      if (files.isEmpty) spark.read.parquet(dir).count()
+      else files.map { st =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromStatus(st, spark.sparkContext.hadoopConfiguration)
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)

@@ -5,8 +5,7 @@ import java.util.Comparator
 import java.util.concurrent.atomic.AtomicLong
 
 /** JVM-scoped scratch space for session-temp parquet intermediates
-  * (materialize-once checkpoints in q25/q29, CC assignment decoupling,
-  * bench corpora). All paths live under ONE per-JVM root that a shutdown
+  * (q69's corpus-build snapshot store, bench and probe corpora). All paths live under ONE per-JVM root that a shutdown
   * hook removes recursively, so repeated catalog passes / Verify runs no
   * longer leak parquet directories into /tmp (ADVICE r03).
   *

@@ -84,8 +84,8 @@ class EntityResolutionSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // VERDICT r02 #2/#6: the degrading driver-bench passes (32→131 s
     // monotone within one session) match a cached-block leak shape. This
     // pins the invariant: a full runOnTable pass releases EVERY block it
-    // created (candidatePairs histogram, extracted/features persists, CC
-    // round checkpoints, final CC lineage) — deterministically, not via GC.
+    // created (extracted/features persists, CC round checkpoints, final CC
+    // lineage) — deterministically, not via GC.
     val corpus = tmpDir("er-flat-") + "/webpages"
     graft.sources.WebPagesGen.webpages(spark, 250L).toDF()
       .write.mode("overwrite").parquet(corpus)
@@ -103,24 +103,6 @@ class EntityResolutionSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // deterministic guard) while still catching systematic degradation
     assert(times.drop(2).min <= 3.0 * times.take(2).min,
       s"passes degrade within one session: $times")
-  }
-
-  test("fast flags (staticPlan + lean) cluster identically to the defaults") {
-    import spark.implicits._
-    // the opt-in fast path (broadcast-hinted histogram, SER caches, no
-    // histogram persist, no defensive edge dedup) is a pure execution
-    // specialization: same docs clustered, zero surviving blocks. AQE is
-    // ON in this session — the broadcast hint must also be harmless there.
-    val corpus = tmpDir("er-fast-") + "/webpages"
-    graft.sources.WebPagesGen.webpages(spark, 200L).toDF()
-      .write.mode("overwrite").parquet(corpus)
-    val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-    val (docsDefault, _) = EntityResolution.runOnTable(spark, corpus)
-    val (docsFast, _) =
-      EntityResolution.runOnTable(spark, corpus, staticPlan = true, lean = true)
-    assert(docsFast == docsDefault)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- preexisting
-    assert(leaked.isEmpty, s"fast-flags pass leaked persisted RDDs: $leaked")
   }
 
   test("labeled pairs include shared-key negatives") {

@@ -78,6 +78,23 @@ class QueriesSpec extends AnyFunSuite with SparkSessionTestWrapper {
       "q67 emitted a pair outside the new-batch/existing-slice split")
   }
 
+  test("q29 equals the planted clustering and leaves no persisted RDD behind") {
+    import spark.implicits._
+    import graft.sources.WebPagesGen
+    val planted = (0L until Queries.Q29Clusters).flatMap { c =>
+      val urls = (0 until WebPagesGen.clusterSize(c)).map(v => WebPagesGen.urlOf(c, v))
+      urls.map(u => (u, urls.min))
+    }.sorted
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    (1 to 2).foreach { run =>
+      val df = Queries.all("q29_er_clusters")(spark, dir)
+      df.write.format("noop").mode("overwrite").save()
+      assert(df.as[(String, String)].collect().toSeq == planted, s"run $run")
+    }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+    assert(leaked.isEmpty, s"q29 left persisted RDDs: $leaked")
+  }
+
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

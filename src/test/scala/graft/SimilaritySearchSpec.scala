@@ -65,6 +65,25 @@ class SimilaritySearchSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(k1.map(_ / 4294967296L).toSeq == (0 until 6).map(_.toLong))
   }
 
+  test("lshCandidates: the queries-eq-corpus path equals the recompute path") {
+    import spark.implicits._
+    // when the query set IS the corpus, the query bucket keys are the
+    // corpus keys relabeled; an equal but distinct Dataset takes the
+    // recompute path. Planted near-duplicates keep the candidate set
+    // non-empty.
+    val corpus = embeddings.union(embeddings.map((r: EmbeddingRow) =>
+      EmbeddingRow(r.id + 1000000L, r.vec.map(_ + 0.001f))))
+    val equalCopy = corpus.toDF().as[EmbeddingRow]
+    assert(!(equalCopy eq corpus))
+    val signs = SimilaritySearch.hashSigns(SimilaritySearch.DefaultPlanes, 64, 42L)
+    def rows(queries: org.apache.spark.sql.Dataset[EmbeddingRow]) =
+      SimilaritySearch.lshCandidates(spark, queries, corpus, signs)
+        .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
+    val shared = rows(corpus)
+    assert(shared.nonEmpty)
+    assert(shared == rows(equalCopy))
+  }
+
   test("candidate volume grows ~linearly with corpus size (16-bit bands)") {
     import spark.implicits._
     // Perturbed copies double the corpus AND co-bucket with their sources.
