@@ -51,26 +51,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   private def session(cores: Int, shufflePartitions: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .appName(s"graft-bench-$cores")
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.default.parallelism", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // BENCH_r04 (driver) died rc=1 when a Hadoop VECTORED parquet read
-      // threw TimeoutException 40 min in (ParquetFileReader
-      // $ConsecutivePartList.readFromVectoredRange): a 32-thread local JVM
-      // on a contended sandbox disk is exactly where vectored-read futures
-      // time out. Plain positional reads have no such future/timeout, and
-      // at local-mode page-cache speeds the vectored merge wins nothing —
-      // disable it for every bench session (VERDICT r04 #1a).
-      .config("spark.hadoop.parquet.hadoop.vectored.io.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.util.Sessions.create(
+      s"local[$cores]", shufflePartitions, appName = s"graft-bench-$cores")
+    // Spark's default, pinned so a changed default cannot move the bench
+    s.conf.set("spark.sql.adaptive.enabled", "true")
     s
   }
 
@@ -78,40 +62,6 @@ object Bench {
     * (AQE on, no plan hints). */
   private def erPass(spark: SparkSession, corpusPath: String): (Long, Double) =
     graft.pipeline.EntityResolution.runOnTable(spark, corpusPath)
-
-  /** Sum of executor task runtime (ms) across a thunk — the per-level CPU
-    * cost of the identical computation. taskSum_low vs taskSum_high/1
-    * separates ENGINE scaling loss (idle cores, serial floor: shows up in
-    * wall but not taskSum) from SILICON loss (per-thread slowdown when
-    * cores share one memory system: shows up in taskSum itself). */
-  private final class TaskClock(sc: org.apache.spark.SparkContext) {
-    private val sum = new java.util.concurrent.atomic.LongAdder
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) sum.add(t.taskMetrics.executorRunTime)
-    })
-    def seconds: Double = sum.sum() / 1e3
-
-    /** Deterministic listener-bus drain (ADVICE r03: a fixed 300 ms sleep
-      * raced queued async task-end events under load): poll until the sum
-      * is unchanged across two consecutive 100 ms windows (ADVICE r04: the
-      * old loop exited after ONE stable window while the doc claimed two),
-      * bounded at 3 s. The final value feeds the per_thread_inflation /
-      * efficiency_engine decomposition, so undercounting here skews a
-      * published headline metric. */
-    def drainedSeconds(): Double = {
-      val deadline = System.nanoTime() + 3L * 1000 * 1000 * 1000
-      var prev = sum.sum()
-      var stableWindows = 0
-      while (stableWindows < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val cur = sum.sum()
-        if (cur == prev) stableWindows += 1 else stableWindows = 0
-        prev = cur
-      }
-      prev / 1e3
-    }
-  }
 
   /** Cores currently consumed by OTHER processes, measured from /proc/stat
     * deltas over a short window in which this JVM is idle — unlike
@@ -155,8 +105,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val sfDir = graft.util.Sessions.sfDir
+    val cpus = graft.util.Sessions.cpus
     // ~112k docs: passes short enough that min-of-k can dodge co-tenant
     // bursts, large enough that parallel compute dominates the per-pass
     // driver/scheduling constant (~2s). A 224k-doc default was tried and
@@ -275,7 +225,7 @@ object Bench {
       // every pass after the warmup runs warm code on a cold block manager
       def onePass(cores: Int): (Long, Double, Double) = {
         val spark = session(cores, partitions)
-        val clock = new TaskClock(spark.sparkContext)
+        val clock = new graft.util.TaskClock(spark.sparkContext)
         try {
           val (docs, sec) = erPass(spark, corpusDir)
           (docs, sec, clock.drainedSeconds())

@@ -14,16 +14,9 @@ import graft.operators.PageProcessing
   */
 object Main {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .appName("graft")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.create(
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"),
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32").toInt)
     try run(spark, args)
     finally spark.stop()
   }

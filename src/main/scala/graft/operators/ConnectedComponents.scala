@@ -113,7 +113,8 @@ object ConnectedComponents {
     * (BLOCKING, idempotent). For callers that materialize the assignment
     * exactly once — a pipeline that counts it, or commits it straight to
     * its own snapshot store — and then release in a `finally`: skips
-    * [[assign]]'s parquet write+read decoupling roundtrip. */
+    * [[assign]]'s second materialization, the eager `localCheckpoint` that
+    * decouples its result from the round blocks. */
   def assignManaged(
       spark: SparkSession,
       edges: Dataset[Edge],

@@ -48,7 +48,8 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     // re-read doubled every stage's read cost just to fill the manifest.
     // One bounded footer read per file (= per partition), driver-side —
     // the same O(files) metadata pass an Iceberg snapshot commit does.
-    val perFile = footerCounts(stage).sortBy(_._1)
+    val perFile = graft.util.ParquetMeta
+      .fileRowCounts(spark, dataDir(stage).toString).sortBy(_._1)
     val totalRows = perFile.map(_._2).sum
     val elapsedMs = (System.nanoTime() - t0) / 1000000
     val filesJson = perFile.map { case (f, n) =>
@@ -70,34 +71,6 @@ final class SnapshotStore(spark: SparkSession, root: String) {
       throw new java.io.IOException(
         s"could not commit manifest for stage $stage (rename failed)")
     reread
-  }
-
-  /** Exact (file, rows) pairs from the parquet footers of a stage's data
-    * files. Falls back to a distributed count scan if any footer is
-    * unreadable (never fails a commit over a metadata hiccup). */
-  private def footerCounts(stage: String): Array[(String, Long)] = {
-    val dir = dataDir(stage)
-    val files = fs.listStatus(dir).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    }
-    try files.map { st =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromStatus(st, spark.sparkContext.hadoopConfiguration)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try (st.getPath.toString, reader.getRecordCount)
-      finally reader.close()
-    } catch {
-      case e: Exception =>
-        System.err.println(
-          s"[snapshot] footer count failed for $stage (${e.getMessage}); " +
-            "falling back to a count scan")
-        import org.apache.spark.sql.functions._
-        spark.read.parquet(dir.toString)
-          .groupBy(input_file_name().as("file")).count()
-          .collect()
-          .map(r => (r.getString(0), r.getLong(1)))
-    }
   }
 
   /** Resume-or-compute: replay the committed snapshot when present. */

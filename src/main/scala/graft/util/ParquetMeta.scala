@@ -15,28 +15,41 @@ object ParquetMeta {
     * sizing must never fail a query over a metadata hiccup — and when the
     * directory holds no flat `*.parquet` file (a partitioned or nested
     * table), whose rows the footer listing cannot see. */
-  def rowCount(spark: SparkSession, dir: String): Long = {
+  def rowCount(spark: SparkSession, dir: String): Long =
+    fileRowCounts(spark, dir).map(_._2).sum
+
+  /** Exact (file, rows) pairs of a parquet table, one per data file, from
+    * the footers; with the same fallback as [[rowCount]], which then counts
+    * rows per `input_file_name`. */
+  def fileRowCounts(spark: SparkSession, dir: String): Array[(String, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
     try {
       val p = new Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = fs.listStatus(p).filter { st =>
+      val files = p.getFileSystem(conf).listStatus(p).filter { st =>
         val n = st.getPath.getName
         st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
       }
-      if (files.isEmpty) spark.read.parquet(dir).count()
+      if (files.isEmpty) countScan(spark, dir)
       else files.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, spark.sparkContext.hadoopConfiguration)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try reader.getRecordCount
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try (st.getPath.toString, reader.getRecordCount)
         finally reader.close()
-      }.sum
+      }
     } catch {
       case e: Exception =>
         System.err.println(
           s"[graft] footer row count failed for $dir (${e.getMessage}); " +
             "falling back to a count scan")
-        spark.read.parquet(dir).count()
+        countScan(spark, dir)
     }
+  }
+
+  private def countScan(spark: SparkSession, dir: String): Array[(String, Long)] = {
+    import org.apache.spark.sql.functions.input_file_name
+    spark.read.parquet(dir)
+      .groupBy(input_file_name().as("file")).count()
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1)))
   }
 }

@@ -96,29 +96,43 @@ class DocsClaimsSpec extends AnyFunSuite {
   test("rule 4: efficiency claims attributed to a BENCH artifact match that artifact") {
     // case-insensitive: builder artifacts are lowercase bench_r*.json —
     // they carry the same accountability as the driver's BENCH_r*.json
-    val benchCite = raw"((?i:bench)_r[0-9A-Za-z._-]*?\.json)".r
+    // The lowercase windows and BENCH_rN-*.json live under bench/, the
+    // per-round BENCH_r0N.json at the root; a citation may carry the
+    // bench/ prefix, which the match includes so the claim window below
+    // stays anchored before the whole path
+    val benchCite = raw"((?:bench/)?(?i:bench)_r[0-9A-Za-z._-]*?\.json)".r
+    def resolve(doc: String, ln: Int, artifact: String): Path = {
+      val found = Seq(repo.resolve(artifact), repo.resolve("bench").resolve(artifact))
+        .find(Files.exists(_))
+      assert(found.isDefined,
+        s"$doc:$ln cites $artifact, which is neither at the repo root nor under bench/")
+      found.get
+    }
     // the claimed number is the nearest d.ddd within 40 chars BEFORE the
     // citation — the "**0.814** (`BENCH_r3-gated.json`)" shape; lines
     // where no number precedes the citation carry no per-artifact claim
-    for {
+    val checked = for {
       doc <- docNames
       (ln, line) <- lines(doc)
       m <- benchCite.findAllMatchIn(line)
       artifact = m.group(1)
+      path = resolve(doc, ln, artifact)
       window = line.substring(math.max(0, m.start - 40), m.start)
       // lookarounds: don't pick "2.25" out of "22.25 s" or a truncated
       // prefix of a longer number
       claim <- raw"(?<![\d.])\d\.\d{2,3}(?!\d)".r.findAllIn(window).toSeq.lastOption
-      path = repo.resolve(artifact)
-      if Files.exists(path)
       text = new String(Files.readAllBytes(path), "UTF-8")
       values = raw""""efficiency[_a-z]*":\s*([0-9.]+)""".r
         .findAllMatchIn(text).map(_.group(1)).toSet
       if values.nonEmpty
-    } assert(
-      values.exists(v => v == claim || v.startsWith(claim) || claim.startsWith(v)),
-      s"$doc:$ln attributes efficiency $claim to $artifact, which records " +
-        s"${values.mkString(", ")}: <<$line>>")
+    } yield {
+      assert(
+        values.exists(v => v == claim || v.startsWith(claim) || claim.startsWith(v)),
+        s"$doc:$ln attributes efficiency $claim to $artifact, which records " +
+          s"${values.mkString(", ")}: <<$line>>")
+      artifact
+    }
+    assert(checked.nonEmpty, "rule 4 found no efficiency claim to check")
   }
 
   test("rule 3: the newest artifact's ratio appears verbatim in every doc") {

@@ -5,19 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local SparkSession for all suites (JVM-wide — Spark session
   * startup dominates test wall time otherwise). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .appName("graft-test")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.util.Sessions.create("local[4]", 4, "graft-test")
 }
 
 trait SparkSessionTestWrapper {
