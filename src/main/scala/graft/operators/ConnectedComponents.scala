@@ -7,30 +7,49 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Edge
 
-/** Iterative transitive closure via alternating large-star / small-star
-  * (Kiveris et al., "Connected Components in MapReduce and Beyond", 2014) —
+/** Connected components, component id = the component's minimum node id,
+  * on one of two paths chosen by the edge count —
   * the north rule's clustering stage. The reference's clustering is
   * exact-key dedup into a UNIQUE(text) table
   * (/root/reference/db/create_tables.sql:41, src/db.py:38-47); this is its
   * scale-out generalization for near-duplicate edges (SURVEY §2.7 X2).
   *
-  * Implementation: partitioner-preserving RDD rounds — the one place the
-  * engine drops below the DataFrame API, deliberately (SURVEY §7: iterative
-  * graph algorithms are the classic RDD case; GraphX itself is RDD-based):
-  *  - each round is ONE job of three stages (symmetrize-shuffle, orient-
-  *    shuffle, dedup-shuffle); the `reduceByKey` min and the `join` against
-  *    it reuse the round's HashPartitioner, so they add NO extra shuffle.
-  *    The equivalent DataFrame loop planned ~5 AQE stage-jobs per round —
-  *    pure driver/scheduling latency that does not shrink with executors
-  *    (it was the measured serial floor of the whole ER pass).
-  *  - convergence = (count, xor-of-edge-hashes) fingerprint computed by the
-  *    SAME action that materializes the round's localCheckpoint; superseded
-  *    checkpoints are unpersisted as soon as the next round materializes.
-  *  - component ids are the component's minimum node id — deterministic
-  *    regardless of parallelism or partition count.
-  * Skew note: a star root's degree equals its component size; rounds hash-
-  * partition by node id, so one giant component concentrates on one task
-  * only at the root — the same bound as the published algorithm.
+  * Both paths start with the same job: the edges are localCheckpointed and
+  * fingerprinted (count, xor of edge hashes), which materializes them once
+  * and yields their count. The edge plan is never computed again.
+  *  - **Driver path** (count ≤ [[DriverEdgeBound]], 2^20 edges): one more
+  *    job collects the materialized edges as primitive `Long` arrays, the
+  *    edge checkpoint is released at once, and union-find runs on the
+  *    driver over sorted distinct endpoints. The result is a map-only
+  *    projection of `allVertices` through a broadcast of the sorted
+  *    (id, comp) arrays; vertices outside the edge set map to themselves.
+  *    Driver memory at the bound: 16 MB of collected edges, 16 MB of
+  *    sorted endpoints, 16 MB of distinct ids, 8 MB of parent ints, 16 MB
+  *    of component ids, and up to 32 MB more while the broadcast is
+  *    serialized — about 110 MB. At catalog and er_web sizes this
+  *    replaces the O(log n) round jobs and the assignment shuffle with one
+  *    small collect.
+  *  - **Rounds** (above the bound): iterative large-star / small-star
+  *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  *    2014) as partitioner-preserving RDD rounds — the one place the
+  *    engine drops below the DataFrame API, deliberately (SURVEY §7:
+  *    iterative graph algorithms are the classic RDD case; GraphX itself is
+  *    RDD-based):
+  *    - each round is ONE job of three stages (symmetrize-shuffle, orient-
+  *      shuffle, dedup-shuffle); the `reduceByKey` min and the `join`
+  *      against it reuse the round's HashPartitioner, so they add NO extra
+  *      shuffle. The equivalent DataFrame loop planned ~5 AQE stage-jobs
+  *      per round — pure driver/scheduling latency that does not shrink
+  *      with executors.
+  *    - convergence = the same fingerprint, computed by the action that
+  *      materializes the round's localCheckpoint; superseded checkpoints
+  *      are unpersisted as soon as the next round materializes.
+  *    Skew note: a star root's degree equals its component size; rounds
+  *    hash-partition by node id, so one giant component concentrates on one
+  *    task only at the root — the same bound as the published algorithm.
+  * Both paths give the same assignment (ConnectedComponentsSpec runs every
+  * oracle case through each), deterministic regardless of parallelism or
+  * partition count.
   */
 object ConnectedComponents {
 
@@ -72,55 +91,180 @@ object ConnectedComponents {
         acc._2 ^ graft.functions.Hashing.hash64(p._1, p._2)),
       (a, b) => (a._1 + b._1, a._2 ^ b._2))
 
+  /** Edge count at or under which [[assignManaged]] runs union-find on the
+    * driver instead of the distributed rounds (memory at the bound: see
+    * the object doc). */
+  private val DriverEdgeBound: Long = 1L << 20
+
+  /** The assignment frame, the thunk that releases what backs it, and
+    * whether it came without rounds (no edges, or the driver path). */
+  private[graft] final case class Assignment(
+      frame: DataFrame, release: () => Unit, onDriver: Boolean)
+
   /** Component assignment for every vertex incident to `edges` plus every
     * vertex in `allVertices` (singletons map to themselves). Returns
-    * DataFrame(id, comp) where comp = min id of the component. */
-  /** @param dedupEdges when true (default), the input edge set is
+    * DataFrame(id, comp) where comp = min id of the component.
+    *
+    * @param dedupEdges when true (default), the input edge set is
     *   shuffled through a `distinct` before iterating — required for
     *   arbitrary callers. The ER pipeline passes false: its edges are the
     *   positive scored pairs, which are unique (src,dst) by construction
     *   (candidate pairs are dropDuplicates'd and scoring is 1:1), so the
     *   distinct would be a pure extra shuffle + stage barrier. Duplicate
-    *   edges would not break correctness either way (largeStar's
+    *   edges would not break correctness either way (union-find, largeStar's
     *   reduceByKey and smallStar's distinct absorb them) — the flag only
-    *   controls whether the first round's input volume is pre-shrunk. */
+    *   controls whether the first job's input volume is pre-shrunk. */
   def assign(
       spark: SparkSession,
       edges: Dataset[Edge],
       allVertices: DataFrame, // single column "id"
       maxIterations: Int = 30,
-      dedupEdges: Boolean = true): DataFrame = {
-    // Converged assignments are materialized (eager localCheckpoint) and
-    // every ROUND checkpoint released (BLOCKING) before returning: the
-    // caller gets a DataFrame whose only dependency is its own
-    // materialized blocks — the lineage hanging off O(log n) iterative
-    // rounds is cut, exactly as an output table would. r07: the
-    // materialization moved from a session-scratch parquet write+read
-    // roundtrip to localCheckpoint (same truncation, no disk roundtrip —
-    // measured on q29/q40/q63's catalog paths); callers that consume the
-    // assignment exactly once can skip it via [[assignManaged]].
-    val (df, release) = assignManaged(spark, edges, allVertices, maxIterations, dedupEdges)
-    if (release eq NoRelease) return df // singleton fast path: no checkpoint to decouple
-    val out = df.localCheckpoint() // eager: materializes before the release
-    release()
+      dedupEdges: Boolean = true): DataFrame =
+    assignBounded(spark, edges, allVertices, maxIterations, dedupEdges, DriverEdgeBound)
+
+  /** [[assign]] with the driver-path bound as a parameter. */
+  private[graft] def assignBounded(
+      spark: SparkSession,
+      edges: Dataset[Edge],
+      allVertices: DataFrame,
+      maxIterations: Int,
+      dedupEdges: Boolean,
+      driverEdgeBound: Long): DataFrame = {
+    // After the rounds, the converged assignment is materialized (eager
+    // localCheckpoint) and every ROUND checkpoint released (BLOCKING)
+    // before returning: the caller gets a DataFrame whose only dependency
+    // is its own materialized blocks — the lineage hanging off O(log n)
+    // iterative rounds is cut, exactly as an output table would. Callers
+    // that consume the assignment exactly once can skip it via
+    // [[assignManaged]]. Without rounds there is no round state to
+    // decouple from: the frame is a projection of `allVertices`, and the
+    // driver path's broadcast is freed with the frame by Spark's
+    // ContextCleaner.
+    val a = assignWithin(spark, edges, allVertices, maxIterations, dedupEdges, driverEdgeBound)
+    if (a.onDriver) return a.frame
+    val out = a.frame.localCheckpoint() // eager: materializes before the release
+    a.release()
     out
   }
 
   private val NoRelease: () => Unit = () => ()
 
-  /** Like [[assign]] but the returned frame stays backed by the final
-    * round's locally-checkpointed RDD; the second element releases it
-    * (BLOCKING, idempotent). For callers that materialize the assignment
+  /** Like [[assign]] but the returned frame stays backed by what the path
+    * built — the driver path's broadcast or the final round's locally
+    * checkpointed RDD; the second element releases it (BLOCKING for the
+    * RDD, idempotent). For callers that materialize the assignment
     * exactly once — a pipeline that counts it, or commits it straight to
     * its own snapshot store — and then release in a `finally`: skips
-    * [[assign]]'s second materialization, the eager `localCheckpoint` that
-    * decouples its result from the round blocks. */
+    * [[assign]]'s second materialization after the rounds. */
   def assignManaged(
       spark: SparkSession,
       edges: Dataset[Edge],
       allVertices: DataFrame, // single column "id"
       maxIterations: Int = 30,
       dedupEdges: Boolean = true): (DataFrame, () => Unit) = {
+    val a = assignWithin(spark, edges, allVertices, maxIterations, dedupEdges, DriverEdgeBound)
+    (a.frame, a.release)
+  }
+
+  /** Both paths behind [[assign]] and [[assignManaged]]: the driver path
+    * when the edge count is at most `driverEdgeBound`, the rounds above. */
+  private[graft] def assignWithin(
+      spark: SparkSession,
+      edges: Dataset[Edge],
+      allVertices: DataFrame,
+      maxIterations: Int,
+      dedupEdges: Boolean,
+      driverEdgeBound: Long): Assignment = {
+    import spark.implicits._
+    val partitions = spark.sessionState.conf.numShufflePartitions
+    val raw = edges.toDF()
+      .select(col("src"), col("dst")).as[(Long, Long)].rdd
+      .filter { case (s, d) => s != d }
+    val e: RDD[(Long, Long)] = if (dedupEdges) raw.distinct(partitions) else raw
+    e.localCheckpoint()
+    // The initial fingerprint materializes the checkpoint AND yields the
+    // edge count for free, which picks the path.
+    val fp0 = fingerprint(e)
+    if (fp0._1 == 0L) { // no edges at all: everyone is a singleton
+      e.unpersist(blocking = true)
+      Assignment(allVertices.select(col("id"), col("id").as("comp")), NoRelease, onDriver = true)
+    } else if (fp0._1 <= driverEdgeBound) driverPath(spark, e, allVertices)
+    else rounds(spark, e, fp0, allVertices, maxIterations, partitions)
+  }
+
+  /** The driver path: collect the materialized edges (one job), release
+    * them, run union-find, and project `allVertices` through a broadcast of
+    * the sorted (id, comp) arrays. */
+  private def driverPath(spark: SparkSession, e: RDD[(Long, Long)], allVertices: DataFrame)
+      : Assignment = {
+    val parts = e.mapPartitions { it =>
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach { case (s, d) => b += s; b += d }
+      Iterator.single(b.result())
+    }.collect()
+    e.unpersist(blocking = true)
+    val bc = spark.sparkContext.broadcast(components(parts))
+    val compOf = udf { (id: Long) =>
+      val (ids, comps) = bc.value
+      val i = java.util.Arrays.binarySearch(ids, id)
+      if (i >= 0) comps(i) else id
+    }
+    val destroyed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    Assignment(
+      allVertices.select(col("id"), compOf(col("id")).as("comp")),
+      () => { if (destroyed.compareAndSet(false, true)) bc.destroy(); () },
+      onDriver = true)
+  }
+
+  /** Union-find over edge lists given as interleaved (src, dst) pairs.
+    * Returns the sorted distinct endpoints and, aligned with them, each
+    * one's component minimum. Nodes are indexed in id order and a union
+    * always keeps the smaller root, so a root's id is its component's
+    * minimum. */
+  private def components(parts: Array[Array[Long]]): (Array[Long], Array[Long]) = {
+    val ends = new Array[Long](parts.iterator.map(_.length).sum)
+    var o = 0
+    parts.foreach { p => System.arraycopy(p, 0, ends, o, p.length); o += p.length }
+    java.util.Arrays.sort(ends)
+    var n = 0
+    var i = 0
+    while (i < ends.length) {
+      if (n == 0 || ends(i) != ends(n - 1)) { ends(n) = ends(i); n += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(ends, n)
+    val parent = new Array[Int](n)
+    i = 0
+    while (i < n) { parent(i) = i; i += 1 }
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) } // path halving
+      r
+    }
+    parts.foreach { p =>
+      var j = 0
+      while (j < p.length) {
+        val a = find(java.util.Arrays.binarySearch(ids, p(j)))
+        val b = find(java.util.Arrays.binarySearch(ids, p(j + 1)))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+        j += 2
+      }
+    }
+    val comps = new Array[Long](n)
+    i = 0
+    while (i < n) { comps(i) = ids(find(i)); i += 1 }
+    (ids, comps)
+  }
+
+  /** The distributed path: large-star/small-star rounds until the edge
+    * fingerprint stops changing. */
+  private def rounds(
+      spark: SparkSession,
+      first: RDD[(Long, Long)],
+      fp0: (Long, Long),
+      allVertices: DataFrame,
+      maxIterations: Int,
+      partitions: Int): Assignment = {
     import spark.implicits._
     // Unpersisting a superseded localCheckpointed round logs Spark's
     // "cannot be recomputed after unpersisting" WARN. Here that is the
@@ -132,23 +276,16 @@ object ConnectedComponents {
       "org.apache.spark.rdd.ShuffledRDD").foreach(cls =>
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         cls, org.apache.logging.log4j.Level.ERROR))
-    val partitions = spark.sessionState.conf.numShufflePartitions
-    val raw = edges.toDF()
-      .select(col("src"), col("dst")).as[(Long, Long)].rdd
-      .filter { case (s, d) => s != d }
-    var e: RDD[(Long, Long)] = if (dedupEdges) raw.distinct(partitions) else raw
-    e.localCheckpoint()
-    // The initial fingerprint materializes the checkpoint AND yields the
-    // edge count for free; the round partitioner is then sized to the edge
-    // volume (~8k edges per round task) instead of inheriting the session
-    // shuffle width — a session tuned for a 100-TB scan would otherwise run
-    // every O(log n) round as a sea of empty tasks whose scheduling latency
-    // is pure serial floor (measured: the 307-doc catalog pipeline spent
-    // most of its wall time scheduling 96-partition CC rounds). Capped
-    // below by 1 and above by the session width, so at-scale behavior
-    // (edges ≫ session width × 8k) is unchanged.
-    val fp0 = fingerprint(e)
+    // The round partitioner is sized to the edge volume (~8k edges per
+    // round task) instead of inheriting the session shuffle width — a
+    // session tuned for a 100-TB scan would otherwise run every O(log n)
+    // round as a sea of empty tasks whose scheduling latency is pure
+    // serial floor (measured: the 307-doc catalog pipeline spent most of
+    // its wall time scheduling 96-partition CC rounds). Capped below by 1
+    // and above by the session width, so at-scale behavior (edges ≫
+    // session width × 8k) is unchanged.
     val hp = IterativeLoop.roundPartitioner(fp0._1, partitions, rowsPerTask = 8192L)
+    var e = first
     var prev = fp0
     var iter = 0
     var converged = false
@@ -166,10 +303,6 @@ object ConnectedComponents {
     // assignment frame hangs off the final round's checkpoint, released
     // by the returned thunk (repeated pipeline passes must end with zero
     // surviving storage blocks — asserted in EntityResolutionSpec).
-    if (prev._1 == 0L) { // no edges at all: everyone is a singleton
-      e.unpersist(blocking = true)
-      return (allVertices.select(col("id"), col("id").as("comp")), NoRelease)
-    }
     val assignments = e
       .flatMap { case (s, d) => Iterator((s, d), (d, d)) }
       .reduceByKey(hp, (a: Long, b: Long) => math.min(a, b))
@@ -179,9 +312,9 @@ object ConnectedComponents {
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
     val finalRound = e
     val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-    (result, () => {
+    Assignment(result, () => {
       if (released.compareAndSet(false, true)) finalRound.unpersist(blocking = true)
       ()
-    })
+    }, onDriver = false)
   }
 }

@@ -6,9 +6,14 @@ import graft.functions.Hashing
 import graft.model.Edge
 import graft.operators.ConnectedComponents
 
-/** Large-star/small-star connected components vs a local union-find oracle
-  * on seeded random graphs (SURVEY §5 test plan). */
+/** Connected components vs a local union-find oracle on seeded random
+  * graphs (SURVEY §5 test plan). Every oracle case runs through both paths:
+  * the driver-side union-find (an unbounded edge bound) and the
+  * large-star/small-star rounds (a negative bound). */
 class ConnectedComponentsSpec extends AnyFunSuite with SparkSessionTestWrapper {
+
+  private val Driver = Long.MaxValue
+  private val Rounds = -1L
 
   private def unionFindOracle(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = Array.tabulate(n)(identity)
@@ -31,15 +36,26 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
-  private def check(n: Int, edges: Seq[(Long, Long)]): Unit = {
+  private def assigned(
+      n: Int, edges: Seq[(Long, Long)], bound: Long, dedupEdges: Boolean = true)
+      : Map[Long, Long] = {
     import spark.implicits._
     val edgeDs = edges.map { case (a, b) => Edge(a, b) }.toDS()
     val vertices = (0L until n.toLong).toDF("id")
-    val result = ConnectedComponents.assign(spark, edgeDs, vertices)
+    ConnectedComponents.assignBounded(spark, edgeDs, vertices, 30, dedupEdges, bound)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val oracle = unionFindOracle(n, edges)
-    assert(result == oracle)
   }
+
+  private def check(n: Int, edges: Seq[(Long, Long)], dedupEdges: Boolean = true): Unit = {
+    val oracle = unionFindOracle(n, edges)
+    for ((path, bound) <- Seq("driver" -> Driver, "rounds" -> Rounds))
+      assert(assigned(n, edges, bound, dedupEdges) == oracle, s"$path path")
+  }
+
+  /** Frees the storage an [[ConnectedComponents.assign]] result owns. */
+  private def unpersistNew(preexisting: Set[Int]): Unit =
+    (spark.sparkContext.getPersistentRDDs.keySet -- preexisting).foreach(id =>
+      spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
 
   test("empty graph: all singletons") { check(5, Nil) }
 
@@ -79,11 +95,9 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val leakedManaged = spark.sparkContext.getPersistentRDDs.keySet -- preexisting
     assert(leakedManaged.isEmpty,
       s"assignManaged release() left persisted RDDs: $leakedManaged")
-    // assign(): identical values; its ROUND state is released internally,
-    // and the ONLY surviving storage is the returned assignment's own
-    // eager localCheckpoint (r07 — the materialization that replaced the
-    // scratch-parquet roundtrip; the caller owns it like any
-    // localCheckpoint'd frame)
+    // assign(): identical values; at most the returned assignment's own
+    // eager localCheckpoint survives (after rounds; the driver path that
+    // this size takes leaves none — both pinned by the path tests below)
     val viaAssign = ConnectedComponents.assign(spark, edges, vertices)
     val gotAssign = viaAssign.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == gotAssign)
@@ -97,12 +111,59 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("dedupEdges=false is exact when input edges are unique") {
     // the pipeline's contract: unique (src,dst) edges may skip the
     // defensive distinct without changing the assignment
+    check(8, Seq((0L, 1L), (1L, 2L), (3L, 4L), (6L, 5L)), dedupEdges = false)
+  }
+
+  test("the edge bound picks the path: driver at the bound, rounds one above") {
     import spark.implicits._
-    val edges = Seq((0L, 1L), (1L, 2L), (3L, 4L), (6L, 5L))
-    val edgeDs = edges.map { case (a, b) => Edge(a, b) }.toDS()
+    val bound = 5L
+    for ((nEdges, onDriver) <- Seq(bound -> true, (bound + 1) -> false)) {
+      val edges = (0L until nEdges).map(i => (i, i + 1))
+      val vertices = (0L to nEdges + 2).toDF("id")
+      val a = ConnectedComponents.assignWithin(
+        spark, edges.map { case (s, d) => Edge(s, d) }.toDS(), vertices, 30,
+        dedupEdges = true, driverEdgeBound = bound)
+      try {
+        assert(a.onDriver == onDriver, s"$nEdges edges under bound $bound")
+        val got = a.frame.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == unionFindOracle(nEdges.toInt + 3, edges))
+      } finally a.release()
+    }
+  }
+
+  test("the driver path leaves no persisted RDD, even after assign") {
+    import spark.implicits._
+    val edges = Seq(Edge(0L, 1L), Edge(1L, 2L), Edge(5L, 6L)).toDS()
     val vertices = (0L until 8L).toDF("id")
-    val fast = ConnectedComponents.assign(spark, edgeDs, vertices, dedupEdges = false)
+    val preexisting = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val a = ConnectedComponents.assignWithin(spark, edges, vertices, 30, true, Driver)
+    assert(a.onDriver)
+    val managed = a.frame.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    a.release(); a.release() // idempotent
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == preexisting)
+    val viaAssign = ConnectedComponents.assignBounded(spark, edges, vertices, 30, true, Driver)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fast == unionFindOracle(8, edges))
+    assert(viaAssign == managed)
+    val leftover = spark.sparkContext.getPersistentRDDs.keySet.toSet -- preexisting
+    unpersistNew(preexisting)
+    assert(leftover.isEmpty, s"assign() on the driver path left persisted RDDs: $leftover")
+  }
+
+  test("the rounds path: release frees every round block, assign keeps only its own") {
+    import spark.implicits._
+    val edges = Seq(Edge(0L, 1L), Edge(1L, 2L), Edge(5L, 6L)).toDS()
+    val vertices = (0L until 8L).toDF("id")
+    val preexisting = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val a = ConnectedComponents.assignWithin(spark, edges, vertices, 30, true, Rounds)
+    assert(!a.onDriver)
+    val managed = a.frame.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    a.release(); a.release()
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == preexisting)
+    val viaAssign = ConnectedComponents.assignBounded(spark, edges, vertices, 30, true, Rounds)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(viaAssign == managed)
+    val leftover = spark.sparkContext.getPersistentRDDs.keySet.toSet -- preexisting
+    unpersistNew(preexisting)
+    assert(leftover.size == 1, s"assign() after rounds: $leftover")
   }
 }
