@@ -156,10 +156,6 @@ object Similarity {
     if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
   }
 
-  /** Word-level shingles (n-grams) of a token array, hashed to longs. */
-  def shingleHashes(tokens: Array[String], n: Int): Array[Long] =
-    shingleHashesFromTokenHashes(tokens.map(hashString), n)
-
   /** Shingle hashes from pre-hashed tokens: combines n consecutive token
     * hashes with the mixer — no string concatenation in the hot loop. */
   def shingleHashesFromTokenHashes(tokenHashes: Array[Long], n: Int): Array[Long] = {

@@ -83,15 +83,5 @@ final case class WebPage(
     text: String,
     lang: String)
 
-/** Ground-truth labeled pair for the pairwise-F1 oracle (FIXTURES.md §2). */
-final case class LabeledPair(
-    url_a: String,
-    url_b: String,
-    is_duplicate: Boolean,
-    block_key: String)
-
 /** An undirected candidate/duplicate edge between two document ids. */
 final case class Edge(src: Long, dst: Long)
-
-/** Final cluster assignment: doc id -> smallest id in its component. */
-final case class ClusterAssignment(id: Long, cluster: Long)

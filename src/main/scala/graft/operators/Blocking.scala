@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing._
@@ -16,9 +16,9 @@ import graft.functions.{Similarity, TextFunctions}
   *  - MinHash-LSH band keys over word 3-shingles of the ASCII-folded text
   *    (bands=5 × rows=4 → Jaccard threshold ≈ 0.67).
   *
-  * Shuffle layout: feature extraction is map-only; TF-IDF is the classic
-  * three partial-agg shuffles (tf by (id,token), df by token, vector by
-  * id); key explosion is map-only. Hot blocks (boilerplate-heavy domains)
+  * Shuffle layout: the per-document [[sketch]] is map-only; TF-IDF adds
+  * one partial-agg shuffle (document frequency by token, broadcast back);
+  * key explosion is map-only. Hot blocks (boilerplate-heavy domains)
   * are handled by a stop-block cap — blocks above `maxBlockSize` are
   * dropped and counted, the standard stop-word analog for blocking — and
   * candidate pairs are salted-repartitioned by pair hash before scoring.
@@ -27,15 +27,16 @@ object Blocking {
 
   final case class ExtractedDoc(id: Long, url: String, title: String, text: String, lang: String)
 
+  /** One `features` row, exactly what later stages read: `blockEntries`
+    * reads `normTitle`/`minhash`, scoring `id`/`normTitle`/`tokenHashes`/
+    * `tfWeights`, the cluster table `url`. */
   final case class DocFeatures(
       id: Long,
       url: String,
       normTitle: String,
       tokenHashes: Array[Long], // sorted distinct: Jaccard set AND TF-IDF keys
       tfWeights: Array[Float], // parallel to tokenHashes (TF-IDF vector; float — half the shuffle/persist bytes, error ≪ decision margins)
-      minhash: Array[Long],
-      simhash: Long,
-      numTokens: Int)
+      minhash: Array[Long])
 
   final case class BlockEntry(key: Long, id: Long)
   final case class CandidatePair(src: Long, dst: Long)
@@ -112,18 +113,54 @@ object Blocking {
   private[graft] def tokenHashesSlow(text: String): Array[Long] =
     TextFunctions.wordTokens(TextFunctions.asciiFold(text)).map(hashString)
 
+  /** The per-document sketch of both ER forms, batch [[features]] and
+    * `StreamingDedup.blockedDocs`: normalized title, sorted distinct token
+    * hashes with counts, and MinHash signature, from ONE tokenization. */
+  private[graft] final case class Sketch(
+      normTitle: String, tokenHashes: Array[Long], counts: Array[Int], minhash: Array[Long])
+
+  private[graft] def sketch(d: ExtractedDoc): Sketch = {
+    val raw = tokenHashesOf(d.text)
+    val (tokenHashes, counts) = distinctCounts(raw)
+    // shingles roll over the raw token order, not the sorted one
+    val shingles = Similarity.shingleHashesFromTokenHashes(raw, ShingleSize)
+    Sketch(TextFunctions.cleanEntity(d.title), tokenHashes, counts,
+      Similarity.minHashSignature(shingles, NumMinHashes))
+  }
+
+  /** The sorted distinct values of `xs` and how often each occurs: one
+    * primitive sort of a copy, then one run-length pass. */
+  private[graft] def distinctCounts(xs: Array[Long]): (Array[Long], Array[Int]) = {
+    val sorted = xs.clone()
+    java.util.Arrays.sort(sorted) // primitive sort — no boxing
+    val distinct = Array.newBuilder[Long]
+    val counts = Array.newBuilder[Int]
+    var i = 0
+    while (i < sorted.length) {
+      var j = i
+      while (j < sorted.length && sorted(j) == sorted(i)) j += 1
+      distinct += sorted(i)
+      counts += j - i
+      i = j
+    }
+    (distinct.result(), counts.result())
+  }
+
+  /** A document's distinct blocking keys: title key (if any), LSH band keys. */
+  private[graft] def blockKeys(normTitle: String, minhash: Array[Long]): Seq[Long] = {
+    val titleKey = if (normTitle.nonEmpty) Seq(hashString("title:" + normTitle)) else Nil
+    (titleKey ++ Similarity.lshBandKeys(minhash, RowsPerBand)).distinct
+  }
+
   /** Full feature table from extracted docs.
     *
-    * TF-IDF layout for scale: term frequency is computed inside the per-doc
-    * map (zero shuffle); document frequency is ONE partial-aggregated
+    * TF-IDF layout for scale: term frequency is the [[sketch]]'s counts
+    * (zero shuffle); document frequency is ONE partial-aggregated
     * groupBy over distinct per-doc tokens, truncated to the `maxDfTokens`
     * most frequent tokens and broadcast. Tokens outside the broadcast are
     * by construction the RAREST ones and take the df=1 default — the same
     * weight a full join would give them up to the truncation, which only
-    * engages when corpus vocabulary exceeds the broadcast budget. This
-    * replaces a 3-shuffle join+regroup cascade (measured 55s of a 70s
-    * feature stage at 56k docs) with one small shuffle plus map-only
-    * weighting.
+    * engages when corpus vocabulary exceeds the broadcast budget.
     *
     * Truncation error bound: a dropped token has true df ≤ the K-th df, so
     * its weight is over-stated by at most log((n+1)/2); dropped tokens are
@@ -154,15 +191,9 @@ object Blocking {
       .mapPartitions { it =>
         val m = new graft.functions.LongCountMap(1 << 14)
         it.foreach { d =>
-          val ths = tokenHashesOf(d.text)
-          java.util.Arrays.sort(ths)
+          val (distinct, _) = distinctCounts(tokenHashesOf(d.text))
           var i = 0
-          while (i < ths.length) {
-            var j = i
-            while (j < ths.length && ths(j) == ths(i)) j += 1
-            m.add(ths(i), 1L)
-            i = j
-          }
+          while (i < distinct.length) { m.add(distinct(i), 1L); i += 1 }
           m.add(SentinelToken, 1L)
         }
         m.iterator
@@ -206,50 +237,24 @@ object Blocking {
     val dfB = spark.sparkContext.broadcast((sortedTokens, sortedDfs))
 
     docs.map { d =>
-      // one tokenization per doc: hashes feed tf/Jaccard AND the shingle
-      // minhash (rolling-hash shingles — no string concat)
-      val raw = tokenHashesOf(d.text)
-      val shingles = Similarity.shingleHashesFromTokenHashes(raw, ShingleSize)
-      val sorted = raw.clone()
-      java.util.Arrays.sort(sorted) // primitive sort — no boxing
-      // run-length encode the sorted stream into (distinct, count) arrays
-      val distinctB = Array.newBuilder[Long]
-      val countB = Array.newBuilder[Double]
-      var i = 0
-      while (i < sorted.length) {
-        var j = i
-        while (j < sorted.length && sorted(j) == sorted(i)) j += 1
-        distinctB += sorted(i)
-        countB += (j - i).toDouble
-        i = j
-      }
-      val tokenHashes = distinctB.result()
-      val tfCounts = countB.result()
+      val s = sketch(d)
       val (toks, dfs) = dfB.value
-      val weights = new Array[Float](tokenHashes.length)
-      i = 0
-      while (i < tokenHashes.length) {
-        val idx = java.util.Arrays.binarySearch(toks, tokenHashes(i))
+      val weights = new Array[Float](s.tokenHashes.length)
+      var i = 0
+      while (i < weights.length) {
+        val idx = java.util.Arrays.binarySearch(toks, s.tokenHashes(i))
         val df = if (idx >= 0) dfs(idx) else 1.0
-        weights(i) = (tfCounts(i) * math.log((n + 1.0) / (df + 1.0))).toFloat
+        weights(i) = (s.counts(i) * math.log((n + 1.0) / (df + 1.0))).toFloat
         i += 1
       }
-      DocFeatures(d.id, d.url, TextFunctions.cleanEntity(d.title), tokenHashes,
-        weights,
-        Similarity.minHashSignature(shingles, NumMinHashes),
-        Similarity.simHash(raw), raw.length)
+      DocFeatures(d.id, d.url, s.normTitle, s.tokenHashes, weights, s.minhash)
     }
   }
 
   /** Blocking keys per doc: title key + LSH band keys. */
   def blockEntries(spark: SparkSession, feats: Dataset[DocFeatures]): Dataset[BlockEntry] = {
     import spark.implicits._
-    feats.flatMap { f =>
-      val titleKey =
-        if (f.normTitle.nonEmpty) Seq(hashString("title:" + f.normTitle)) else Nil
-      val bandKeys = Similarity.lshBandKeys(f.minhash, RowsPerBand)
-      (titleKey ++ bandKeys).distinct.map(k => BlockEntry(k, f.id))
-    }
+    feats.flatMap(f => blockKeys(f.normTitle, f.minhash).map(k => BlockEntry(k, f.id)))
   }
 
   /** Candidate-pair generation handle: the pairs dataset, a hot-block

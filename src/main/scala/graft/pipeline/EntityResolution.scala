@@ -2,12 +2,13 @@ package graft.pipeline
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.HtmlExtract
-import graft.model.{Edge, LabeledPair, WebPage}
+import graft.model.{Edge, WebPage}
 import graft.operators.{Blocking, ConnectedComponents, PairScoring}
 import graft.operators.Blocking.ExtractedDoc
 import graft.sources.{SnapshotStore, WebPagesGen}
@@ -51,9 +52,15 @@ import graft.sources.{SnapshotStore, WebPagesGen}
   */
 object EntityResolution {
 
-  final case class F1Report(
-      tp: Long, fp: Long, fn: Long,
-      precision: Double, recall: Double, f1: Double)
+  /** Pairwise clustering quality over every pair of truth urls: tp when
+    * both share a true and a predicted cluster, fp only a predicted one (an
+    * over-merge), fn only a true one (a split, or a `missing` url, which
+    * is a predicted singleton). `extra` urls (assigned, not in the truth)
+    * are in no pair. `partitionErrors`: true clusters not reproduced
+    * exactly; `largestCluster`: largest predicted cluster. */
+  final case class Quality(
+      tp: Long, fp: Long, fn: Long, precision: Double, recall: Double, f1: Double,
+      partitionErrors: Long, largestCluster: Long, missing: Long, extra: Long)
 
   /** Where the chain's stage outputs live. */
   sealed trait Materialization
@@ -137,29 +144,42 @@ object EntityResolution {
   def resolve(spark: SparkSession, store: SnapshotStore, pages: Dataset[WebPage]): DataFrame =
     run(spark, pages, Snapshot(store))(identity)
 
-  /** Pairwise F1 of predicted same-cluster vs labeled pairs (the metric in
-    * BASELINE.json): a labeled pair is predicted duplicate iff both urls
-    * land in the same cluster. */
-  def pairwiseF1(
-      spark: SparkSession,
-      assignments: DataFrame,
-      labeled: Dataset[LabeledPair]): F1Report = {
-    val a = assignments.select(col("url").as("url_a"), col("cluster").as("cluster_a"))
-    val b = assignments.select(col("url").as("url_b"), col("cluster").as("cluster_b"))
-    val joined = labeled.toDF().join(a, "url_a").join(b, "url_b")
-      .withColumn("predicted", col("cluster_a") === col("cluster_b"))
-    val counts = joined.agg(
-      sum(when(col("predicted") && col("is_duplicate"), 1).otherwise(0)).as("tp"),
-      sum(when(col("predicted") && !col("is_duplicate"), 1).otherwise(0)).as("fp"),
-      sum(when(!col("predicted") && col("is_duplicate"), 1).otherwise(0)).as("fn"))
-      .head()
-    val tp = counts.getLong(0); val fp = counts.getLong(1); val fn = counts.getLong(2)
-    val precision = if (tp + fp == 0) 1.0 else tp.toDouble / (tp + fp)
-    val recall = if (tp + fn == 0) 1.0 else tp.toDouble / (tp + fn)
-    val f1 =
-      if (precision + recall == 0) 0.0
-      else 2 * precision * recall / (precision + recall)
-    F1Report(tp, fp, fn, precision, recall, f1)
+  /** [[Quality]] of `assignments` (url, cluster) against `truth` (url,
+    * truth), each url at most once a side: one Spark aggregate over the
+    * (true, predicted) contingency cells. */
+  def quality(assignments: DataFrame, truth: DataFrame): Quality = {
+    // a missing url's predicted cluster is its own (null, url) singleton
+    val pred = struct(col("cluster"), when(col("cluster").isNull, col("url")))
+    val cells = truth.select("url", "truth")
+      .join(assignments.select("url", "cluster"), Seq("url"), "full_outer")
+      .groupBy(col("truth"), pred.as("pred"))
+      .agg(count(lit(1)).as("n"), count(when(col("cluster").isNull, 1)).as("missing"))
+    val known = col("truth").isNotNull
+    val n = col("n")
+    // Σ n·(size-1) over a cluster's cells is twice its pair count
+    val sized = cells
+      .withColumn("tsize", sum(n).over(Window.partitionBy("truth")))
+      .withColumn("psize", sum(when(known, n)).over(Window.partitionBy("pred")))
+    def total(c: Column) = coalesce(sum(c), lit(0L))
+    val r = sized.agg(
+      total(when(known, n * (n - 1))),
+      total(when(known, n * (col("tsize") - 1))),
+      total(when(known, n * (col("psize") - 1))),
+      // a true cluster is exact iff one cell holds all of it and nothing else
+      countDistinct(when(known && (n =!= col("tsize") || n =!= col("psize")), col("truth"))),
+      coalesce(max(when(known, col("psize"))), lit(0L)),
+      total(col("missing")),
+      total(when(!known, n))
+    ).head()
+    val tp = r.getLong(0) / 2
+    val fn = r.getLong(1) / 2 - tp
+    val fp = r.getLong(2) / 2 - tp
+    Quality(tp, fp, fn,
+      precision = if (tp + fp == 0) 1.0 else tp.toDouble / (tp + fp),
+      recall = if (tp + fn == 0) 1.0 else tp.toDouble / (tp + fn),
+      f1 = if (tp + fp + fn == 0) 1.0 else 2.0 * tp / (2.0 * tp + fp + fn),
+      partitionErrors = r.getLong(3), largestCluster = r.getLong(4),
+      missing = r.getLong(5), extra = r.getLong(6))
   }
 
   /** One in-memory pass over an EXISTING webpages table — the north rule's
@@ -174,23 +194,24 @@ object EntityResolution {
     (docs, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Generate the corpus, run the pipeline, evaluate F1, return a one-line
-    * JSON report. `nClusters` clusters ≈ 2.05 docs each. */
+  /** Generate the corpus, run the pipeline, evaluate its [[quality]]
+    * against the generator's truth, return a one-line JSON report.
+    * `nClusters` clusters ≈ 2.05 docs each. */
   def runAndReport(spark: SparkSession, outDir: String, nClusters: Long): String = {
     import spark.implicits._
     val store = new SnapshotStore(spark, outDir)
     val t0 = System.nanoTime()
     val pages = store.getOrCreate("webpages")(
       WebPagesGen.webpages(spark, nClusters).toDF()).as[WebPage]
-    val labeled = store.getOrCreate("labeled_pairs")(
-      WebPagesGen.labeledPairs(spark, nClusters).toDF()).as[LabeledPair]
     val assignments = resolve(spark, store, pages)
     val nDocs = assignments.count()
-    val report = pairwiseF1(spark, assignments, labeled)
+    val q = quality(assignments, WebPagesGen.truth(spark, nClusters))
     val elapsed = (System.nanoTime() - t0) / 1e9
     val docsPerSec = nDocs / elapsed
-    f"""{"docs":$nDocs,"clusters":$nClusters,"tp":${report.tp},"fp":${report.fp},"fn":${report.fn},""" +
-      f""""precision":${report.precision}%.6f,"recall":${report.recall}%.6f,"f1":${report.f1}%.6f,""" +
+    f"""{"docs":$nDocs,"clusters":$nClusters,"tp":${q.tp},"fp":${q.fp},"fn":${q.fn},""" +
+      f""""precision":${q.precision}%.6f,"recall":${q.recall}%.6f,"f1":${q.f1}%.6f,""" +
+      f""""partitionErrors":${q.partitionErrors},"largestCluster":${q.largestCluster},""" +
+      f""""missing":${q.missing},"extra":${q.extra},""" +
       f""""elapsedSec":$elapsed%.3f,"docsPerSec":$docsPerSec%.1f}"""
   }
 }

@@ -2,14 +2,14 @@ package graft.sources
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.functions.Hashing._
 import graft.functions.{HtmlExtract, TextFunctions}
-import graft.model.{LabeledPair, WebPage}
+import graft.model.WebPage
 
 /** Deterministic synthetic Common-Crawl-style corpus with planted duplicate
-  * clusters and labeled pairs (FIXTURES.md §1-2).
+  * clusters and their ground truth (FIXTURES.md §1-2).
   *
   * Every page is a pure function of (seed, clusterId, variantId): the
   * generator is a distributed `spark.range` map with counter-based hashing
@@ -25,8 +25,8 @@ import graft.model.{LabeledPair, WebPage}
   *  - hot domains: a Zipf-ish skew concentrates pages on a few domains that
   *    share heavy boilerplate (hot-block stress for the salting path);
   *  - title-collision negatives: some clusters reuse another cluster's
-  *    title verbatim over a different body — labeled non-duplicate pairs
-  *    that share the title blocking key (precision stress).
+  *    title verbatim over a different body — non-duplicate pairs that
+  *    share the title blocking key (precision stress).
   */
 object WebPagesGen {
 
@@ -190,8 +190,9 @@ $paras
       lang = lang))
   }
 
-  /** The shared blocking key labeled pairs are measured at: the
-    * ASCII-folded lowercase title (cleanEntity, db.py:12-13 semantics). */
+  /** The title blocking key cluster `c` plants (shared with `c - 1` on a
+    * title collision): the ASCII-folded lowercase title (cleanEntity,
+    * db.py:12-13 semantics). */
   def blockKeyOf(c: Long): String =
     TextFunctions.cleanEntity(titleWords(c).map(TextFunctions.upperFirst).mkString(" "))
 
@@ -215,22 +216,13 @@ $paras
     }
   }
 
-  /** Ground truth: positive pairs within each cluster; negative pairs
-    * between title-collision clusters (same block key, different body). */
-  def labeledPairs(spark: SparkSession, nClusters: Long): Dataset[LabeledPair] = {
+  /** Ground truth (url, truth): every generated url with the planted
+    * cluster it belongs to — the truth side of
+    * `EntityResolution.quality`. */
+  def truth(spark: SparkSession, nClusters: Long): DataFrame = {
     import spark.implicits._
     spark.range(nClusters).flatMap { c =>
-      val size = clusterSize(c)
-      val urls = (0 until size).map(v => urlOf(c, v))
-      val positives = for {
-        i <- 0 until size
-        j <- (i + 1) until size
-      } yield LabeledPair(urls(i), urls(j), is_duplicate = true, blockKeyOf(c))
-      val negatives =
-        if (hasTitleCollision(c))
-          Seq(LabeledPair(urlOf(c - 1, 0), urls.head, is_duplicate = false, blockKeyOf(c)))
-        else Nil
-      positives ++ negatives
-    }
+      (0 until clusterSize(c)).map(v => (urlOf(c, v), c.longValue))
+    }.toDF("url", "truth")
   }
 }

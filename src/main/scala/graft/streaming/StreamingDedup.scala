@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.functions.{Hashing, Similarity, TextFunctions}
+import graft.functions.Similarity
 import graft.operators.Blocking
 import graft.operators.Blocking.ExtractedDoc
 
@@ -15,14 +15,15 @@ import graft.operators.Blocking.ExtractedDoc
   * runs this instead of re-running the batch pipeline per crawl snapshot.
   *
   * Semantics pinned to the batch pipeline:
-  *  - SAME blocking keys (normalized-title key + MinHash-LSH band keys,
-  *    computed by the same `Blocking`/`Similarity` kernels);
+  *  - SAME sketch and blocking keys as the batch path, by construction
+  *    ([[blockedDocs]]);
   *  - duplicate decision = the batch rule's exact-Jaccard leg at the same
   *    0.35 threshold ([[graft.operators.PairScoring.decide]]'s content
   *    bar; the planted-corpus margins are ≥0.42 for true variants vs
   *    ≤0.26 for shared-title negatives, so the streaming and batch
-  *    decisions agree — asserted end-to-end in `StreamingDedupSpec` at
-  *    pairwise F1 ≥ 0.99 vs the labeled pairs);
+  *    decisions agree — asserted end-to-end in `StreamingDedupSpec`:
+  *    `EntityResolution.quality` against the generator's truth reaches
+  *    pairwise F1 ≥ 0.99 over all pairs, with no url missing);
   *  - stop-block cap: a block that grows past `maxBlockSize` members
   *    stops storing and stops emitting (the streaming form of the batch
   *    hot-block drop — a stream cannot retract already-emitted edges, so
@@ -57,30 +58,15 @@ object StreamingDedup {
   val DefaultMaxBlockSize: Int = Blocking.DefaultMaxBlockSize
 
   /** Map-side blocking-key explosion for a document stream: one
-    * (key, id, sorted-distinct token hashes) row per blocking key, keys
-    * identical to the batch `Blocking.features` → `blockEntries` path. */
+    * (key, id, sorted-distinct token hashes) row per blocking key, built
+    * from `Blocking.sketch` and `Blocking.blockKeys` — the batch
+    * `features` → `blockEntries` definitions (`StreamingDedupSpec`
+    * checks the two agree). */
   def blockedDocs(spark: SparkSession, docs: Dataset[ExtractedDoc]): Dataset[BlockedDoc] = {
     import spark.implicits._
     docs.flatMap { d =>
-      val raw = Blocking.tokenHashesOf(d.text)
-      val sorted = raw.clone()
-      java.util.Arrays.sort(sorted)
-      val b = Array.newBuilder[Long]
-      var i = 0
-      while (i < sorted.length) {
-        var j = i
-        while (j < sorted.length && sorted(j) == sorted(i)) j += 1
-        b += sorted(i)
-        i = j
-      }
-      val tokenHashes = b.result()
-      val shingles = Similarity.shingleHashesFromTokenHashes(raw, Blocking.ShingleSize)
-      val minhash = Similarity.minHashSignature(shingles, Blocking.NumMinHashes)
-      val normTitle = TextFunctions.cleanEntity(d.title)
-      val titleKey =
-        if (normTitle.nonEmpty) Seq(Hashing.hashString("title:" + normTitle)) else Nil
-      val bandKeys = Similarity.lshBandKeys(minhash, Blocking.RowsPerBand)
-      (titleKey ++ bandKeys).distinct.map(k => BlockedDoc(k, d.id, tokenHashes))
+      val s = Blocking.sketch(d)
+      Blocking.blockKeys(s.normTitle, s.minhash).map(k => BlockedDoc(k, d.id, s.tokenHashes))
     }
   }
 

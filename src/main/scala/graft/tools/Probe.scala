@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.SparkEntry
+import graft.pipeline.EntityResolution
 import graft.util.{Sessions, TaskClock}
 
 /** The diagnostic main: timed passes with the executor-time split of the
@@ -15,7 +16,8 @@ import graft.util.{Sessions, TaskClock}
   *     the in-memory ER pass (`EntityResolution.runOnTable`, the pass
   *     graft.Bench's ER section times) over a generated corpus of
   *     `nClusters` clusters, written once outside the timed region, at
-  *     local[cores] with `partitions` (default: cores) partitions;
+  *     local[cores] with `partitions` (default: cores) partitions, then
+  *     one untimed pass prints its `EntityResolution.quality`;
   *   runMain graft.tools.Probe time <q,...|all> [passes] [sfDir]
   *     each catalog query computed into the noop sink — every column of
   *     every row, without a sink's cost or a count-pruned subtree;
@@ -45,13 +47,19 @@ object Probe {
   /** Run one probe on `spark`, leaving the session running. */
   def run(spark: SparkSession, args: Array[String]): Unit = args.toList match {
     case "time" :: "er" :: cores :: nClusters :: rest =>
+      import spark.implicits._
       val corpus = graft.util.Scratch.unique("probe_corpus") + "/webpages"
       graft.sources.WebPagesGen.webpages(spark, nClusters.toLong)
         .repartition(48).write.mode("overwrite").parquet(corpus)
       time(spark, s"er cores=$cores", passes(rest)) {
-        val (docs, _) = graft.pipeline.EntityResolution.runOnTable(spark, corpus)
+        val (docs, _) = EntityResolution.runOnTable(spark, corpus)
         s"docs=$docs"
       }
+      val truth = graft.sources.WebPagesGen.truth(spark, nClusters.toLong)
+      val q = EntityResolution.run(spark, spark.read.parquet(corpus).as[graft.model.WebPage],
+        EntityResolution.InMemory)(EntityResolution.quality(_, truth))
+      println(f"[probe] er quality: f1=${q.f1}%.6f partitionErrors=${q.partitionErrors} " +
+        s"largestCluster=${q.largestCluster} missing=${q.missing} extra=${q.extra}")
 
     case "time" :: qs :: rest =>
       val dir = rest.lift(1).getOrElse(Sessions.sfDir)

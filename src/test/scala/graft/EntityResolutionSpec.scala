@@ -5,11 +5,12 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.HtmlExtract
-import graft.model.{LabeledPair, WebPage}
+import graft.model.WebPage
 import graft.pipeline.EntityResolution
 import graft.sources.{SnapshotStore, WebPagesGen}
 
-/** End-to-end entity-resolution pipeline: pairwise F1 target, extraction
+/** End-to-end entity-resolution pipeline: pairwise F1 target over all
+  * pairs (and the quality report that measures it), extraction
   * determinism, and checkpoint resume (SURVEY §5 items 3-4, 6). */
 class EntityResolutionSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
@@ -46,11 +47,69 @@ class EntityResolutionSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val n = 300L
     val pages = store.getOrCreate("webpages")(
       WebPagesGen.webpages(spark, n).toDF()).as[WebPage]
-    val labeled = WebPagesGen.labeledPairs(spark, n)
     val assignments = EntityResolution.resolve(spark, store, pages)
-    val report = EntityResolution.pairwiseF1(spark, assignments, labeled)
-    assert(report.tp + report.fn > 200, s"labeled positives too few: $report")
-    assert(report.f1 >= 0.99, s"F1 below target: $report")
+    val q = EntityResolution.quality(assignments, WebPagesGen.truth(spark, n))
+    assert(q.tp + q.fn > 200, s"true pairs too few: $q")
+    assert(q.f1 >= 0.99, s"F1 below target: $q")
+    assert(q.missing == 0 && q.extra == 0, s"assignments are not a partition of the corpus: $q")
+    assert(q.partitionErrors == 0, s"planted clusters not reproduced exactly: $q")
+  }
+
+  test("quality counts every pair: over-merges, dropped and extra urls") {
+    import spark.implicits._
+    val n = 60L
+    val truth = WebPagesGen.truth(spark, n)
+    val rows = truth.as[(String, Long)].collect().toSeq
+    def q(assigned: Seq[(String, Long)]) =
+      EntityResolution.quality(assigned.toDF("url", "cluster"), truth)
+    // brute force over every pair of truth urls; a url missing from the
+    // assignment is a singleton of its own
+    def oracle(assigned: Seq[(String, Long)]): (Long, Long, Long) = {
+      val predOf = assigned.toMap
+      val urls = rows.toIndexedSeq
+      var tp, fp, fn = 0L
+      for (i <- urls.indices; j <- (i + 1) until urls.size) {
+        val sameTrue = urls(i)._2 == urls(j)._2
+        val samePred = (predOf.get(urls(i)._1), predOf.get(urls(j)._1)) match {
+          case (Some(a), Some(b)) => a == b
+          case _ => false
+        }
+        if (sameTrue && samePred) tp += 1
+        else if (samePred) fp += 1
+        else if (sameTrue) fn += 1
+      }
+      (tp, fp, fn)
+    }
+    val exact = q(rows)
+    assert(exact.f1 == 1.0 && exact.partitionErrors == 0 && exact.missing == 0, exact)
+    val sizes = rows.groupBy(_._2).view.mapValues(_.size).toMap
+    assert(sizes.size == n && exact.largestCluster == sizes.values.max, exact)
+    // merge two non-adjacent planted clusters (never title-collision
+    // neighbours, which share a blocking key)
+    val multi = sizes.keys.toSeq.sorted.filter(sizes(_) >= 2)
+    val a = multi.head
+    val b = multi.find(_ > a + 1).get
+    val merged = rows.map { case (u, c) => (u, if (c == b) a else c) }
+    val mq = q(merged)
+    assert(mq.f1 < 1.0 && mq.fp == sizes(a).toLong * sizes(b) && mq.fn == 0, mq)
+    assert(mq.partitionErrors == 2 && mq.largestCluster >= sizes(a) + sizes(b), mq)
+    // drop one url of a multi-document cluster
+    val dropped = rows.filterNot(_._1 == rows.find(_._2 == a).get._1)
+    val dq = q(dropped)
+    assert(dq.f1 < 1.0 && dq.fn == sizes(a) - 1L && dq.fp == 0 && dq.missing == 1, dq)
+    assert(dq.partitionErrors == 1, dq)
+    // an assigned url absent from the truth is counted, in no pair
+    val xq = q(rows :+ ("http://not-generated.example/x" -> a))
+    assert(xq.extra == 1 && xq.f1 == 1.0, xq)
+    // seeded random assignments agree with the brute-force pair count
+    val rnd = new scala.util.Random(7)
+    (1 to 3).foreach { _ =>
+      val assigned = rows.filter(_ => rnd.nextDouble() > 0.05)
+        .map { case (u, c) => (u, if (rnd.nextDouble() < 0.2) rnd.nextInt(8).toLong else c) }
+      val r = q(assigned)
+      assert((r.tp, r.fp, r.fn) == oracle(assigned), r)
+      assert(r.missing == rows.size - assigned.size, r)
+    }
   }
 
   test("resume: second run replays committed snapshots byte-identically") {
@@ -103,14 +162,5 @@ class EntityResolutionSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // deterministic guard) while still catching systematic degradation
     assert(times.drop(2).min <= 3.0 * times.take(2).min,
       s"passes degrade within one session: $times")
-  }
-
-  test("labeled pairs include shared-key negatives") {
-    import spark.implicits._
-    val labeled: Array[LabeledPair] =
-      WebPagesGen.labeledPairs(spark, 300L).collect()
-    assert(labeled.exists(!_.is_duplicate))
-    assert(labeled.exists(_.is_duplicate))
-    assert(labeled.forall(_.block_key.nonEmpty))
   }
 }

@@ -14,8 +14,7 @@ class PairScoringSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   private def feat(id: Long, title: String, tokens: Seq[Long], w: Seq[Float]): DocFeatures =
     DocFeatures(id, s"u$id", title, tokens.toArray, w.toArray,
-      Similarity.minHashSignature(tokens.toArray, 20),
-      Similarity.simHash(tokens.toArray), tokens.length)
+      Similarity.minHashSignature(tokens.toArray, 20))
 
   test("distributed scores equal direct scalar computation") {
     import spark.implicits._

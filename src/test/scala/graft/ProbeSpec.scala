@@ -27,6 +27,8 @@ class ProbeSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(docs.size == 1, lines.mkString("\n"))
     assert(docs.head.group(1).toLong > 0)
     assert(lines.exists(_.contains(" min=")))
+    assert(lines.exists(l => l.startsWith("[probe] er quality: f1=") &&
+      l.contains(" missing=0 extra=0")), lines.mkString("\n"))
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
     assert(!spark.sparkContext.isStopped)
   }
