@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.functions.{Hashing, OracleHash, Similarity}
 import graft.operators.Blocking
 import graft.pipeline.EntityResolution
+import graft.util.Materialize
 
 /** The driver-facing operator catalog: one named query per implemented
   * operator family from SURVEY.md §2, each with a DuckDB oracle (same
@@ -504,13 +505,12 @@ object Queries {
     // the materialization from session-local parquet to localCheckpoint
     // (the skim/fps-family idiom): same lineage truncation, no disk
     // write+read roundtrip of the shingle arrays inside the timed query.
-    val docs = shingleDocs(s, d).toDF("doc_id", "sh").localCheckpoint()
+    val docs = Materialize.checkpoint(shingleDocs(s, d).toDF("doc_id", "sh")).value
     // r07: the band-entry table feeds TWO consumers inside candidatePairs
     // (the block-size histogram and the eligibility join) — localCheckpoint
     // it so the MinHash signature pass (20 affine perms + an md5-family
     // hash per shingle) runs once per document instead of twice.
-    val entries = bandEntriesOf(s, docs.as[(Long, Seq[String])])
-      .localCheckpoint()
+    val entries = Materialize.checkpoint(bandEntriesOf(s, docs.as[(Long, Seq[String])])).value
     val gen = Blocking.candidatePairs(s, entries, MaxBlockSz,
       persistSizes = false)
     val a = docs.select(col("doc_id").as("src_doc"), col("sh").as("sh_a"))
@@ -641,13 +641,12 @@ object Queries {
     // r07: the simhash table feeds BOTH the probe (min-doc reference row)
     // and the main projection — localCheckpoint it so the md5-family
     // bit-vote pass over every token runs once instead of twice.
-    val sims = t(s, d, "documents")
+    val sims = Materialize.checkpoint(t(s, d, "documents")
       .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("toks"))
       .as[(Long, Seq[String])]
       .map { case (id, toks) =>
         (id, Similarity.simHash(toks.map(OracleHash.h32).toArray))
-      }.toDF("doc_id", "simhash")
-      .localCheckpoint()
+      }.toDF("doc_id", "simhash")).value
     val probe = sims.orderBy("doc_id").limit(1)
       .select(col("simhash").as("probe_sim"))
     sims.crossJoin(broadcast(probe))
@@ -919,7 +918,9 @@ object Queries {
     val edges = cands.where(round(col("cosine"), 4) >= 0.9)
       .select(col("qid").as("src"), col("cid").as("dst"))
       .as[graft.model.Edge]
-    ConnectedComponents.assign(s, edges, emb.select(col("id")))
+    // read once by the lazy result; what backs the assignment is left to
+    // the ContextCleaner
+    ConnectedComponents.assignManaged(s, edges, emb.select(col("id")))._1
       .select(col("id").as("vec_id"), col("comp").as("canonical"))
       .orderBy("vec_id")
   }
@@ -1090,10 +1091,9 @@ object Queries {
     // (guide §2.4: share one exchange instead of recomputing the subtree).
     // Set-op semantics are unchanged: each leg was distinct-by-partkey
     // within one year, which the (partkey, yr)-distinct table preserves.
-    val joined = li.join(ord, col("l_orderkey") === col("o_orderkey"))
+    val joined = Materialize.checkpoint(li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .select(col("l_partkey").as("partkey"), col("yr"))
-      .distinct()
-      .localCheckpoint()
+      .distinct()).value
     def inYear(y: org.apache.spark.sql.Column) =
       joined.where(col("yr") === y).select("partkey").distinct()
     val years = joined.select("yr").distinct().orderBy(col("yr"))
@@ -1722,7 +1722,7 @@ object Queries {
     // links (src -> (dst, deg)) emit straight from the buffer. The output
     // keeps src as the key, so preservesPartitioning's hp claim is honest
     // (same discipline IterativeLoopSpec pins).
-    val links = pairs.as[(Long, Long)].rdd
+    val links = Materialize.cache(pairs.as[(Long, Long)].rdd
       .flatMap { case (o, p) => Iterator((o, p), (p, o)) }
       .partitionBy(hp)
       .mapPartitions({ it =>
@@ -1733,11 +1733,10 @@ object Queries {
           if (seen.add(e)) { buf += e; degM.merge(e._1, 1L, _ + _) }
         }
         buf.iterator.map { case (s, d2) => (s, (d2, degM.get(s).longValue())) }
-      }, preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      }, preservesPartitioning = true))
     // per-node degree table, derived partition-locally from the cached
     // links (keys unchanged -> the hp claim stays honest)
-    val deg = links
+    val deg = Materialize.cache(links.value
       .mapPartitions({ it =>
         val m = new java.util.HashMap[Long, Long]()
         it.foreach { case (s, (_, dg)) => m.put(s, dg) }
@@ -1746,9 +1745,8 @@ object Queries {
           def hasNext = entries.hasNext
           def next() = { val e = entries.next(); (e.getKey, e.getValue) }
         }
-      }, preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    var ranks = deg.mapValues(_ => 1000000L) // hp-partitioned
+      }, preservesPartitioning = true))
+    var ranks = deg.value.mapValues(_ => 1000000L) // hp-partitioned
     for (_ <- 1 to 5) {
       // contributions are dst-keyed but src-laid-out: lookupJoin NEVER
       // claims hp, so the reduceByKey below pays its (semantically
@@ -1758,12 +1756,12 @@ object Queries {
       // getOrDefault, not get: ranks ⊇ deg keys holds today, but a
       // refactor of deg/ranks must not turn into an unboxing NPE.
       val sums = graft.operators.IterativeLoop
-        .lookupJoin(links, ranks, hp) { (l, rk) =>
+        .lookupJoin(links.value, ranks, hp) { (l, rk) =>
           Iterator((l._2._1, rk.getOrDefault(l._1, 0L) / l._2._2))
         }
         .reduceByKey(hp, _ + _) // the round's ONE shuffle
       ranks = graft.operators.IterativeLoop
-        .lookupJoinSameKey(deg, sums, hp) { (dn, sm) =>
+        .lookupJoinSameKey(deg.value, sums, hp) { (dn, sm) =>
           // absent key = isolated node at floor
           Iterator((dn._1, 150000L + (850000L * sm.getOrDefault(dn._1, 0L)) / 1000000L))
         }
@@ -1771,8 +1769,8 @@ object Queries {
     val top = ranks
       .takeOrdered(20)(Ordering.by { case (node, pr) => (-pr, node) })
       .map { case (node, pr) => (node, pr) }
-    links.unpersist(blocking = true)
-    deg.unpersist(blocking = true)
+    links.release()
+    deg.release()
     s.createDataFrame(top.toSeq).toDF("node", "pr")
   }
 
@@ -1836,8 +1834,8 @@ object Queries {
     // once instead of twice (the join side used to re-derive the whole
     // subtree; at 100 TB this materialized tf table is the classic
     // two-pass tf-idf intermediate).
-    val tf = terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+    val tf = Materialize.checkpoint(
+      terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))).value
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val rankW = Window.partitionBy("doc_id")
       .orderBy(col("tf").desc, col("df"), col("term"))
@@ -2164,8 +2162,7 @@ object Queries {
   private def winnowedFps(s: SparkSession, d: String): DataFrame = {
     fpsCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     fpsCache.computeIfAbsent((s, d), _ =>
-      graft.operators.FingerprintDedup.skim(t(s, d, "documents"))
-        .localCheckpoint())
+      Materialize.checkpoint(graft.operators.FingerprintDedup.skim(t(s, d, "documents"))).value)
   }
 
   private lazy val fpCtes: String =
@@ -2277,11 +2274,10 @@ object Queries {
     // join — localCheckpoint it so the scan→lower→split→explode pass runs
     // once instead of twice. The join below stays HINT-FREE (the pinned
     // at-scale economics, PlanGuardSpec).
-    val toks = t(s, d, "documents")
+    val toks = Materialize.checkpoint(t(s, d, "documents")
       .select(col("doc_id"),
         explode(split(lower(col("text")), "[^a-z]+")).as("term"))
-      .where(length(col("term")) >= 3)
-      .localCheckpoint()
+      .where(length(col("term")) >= 3)).value
     val cnts = toks.groupBy("term").agg(count(lit(1)).as("cnt"))
     toks.join(cnts, "term")
       .groupBy("doc_id")
@@ -2377,8 +2373,9 @@ object Queries {
     val comp = graft.operators.ConnectedComponents
       // dedupEdges=false: the pair aggregation already emits unique
       // (src,dst) rows, so the pre-loop distinct would be a pure extra
-      // shuffle (same argument as the ER pipeline's call site)
-      .assign(s, edges, docs.select(col("doc_id").as("id")), dedupEdges = false)
+      // shuffle (same argument as the ER pipeline's call site); read once
+      // by the lazy result, so the release is left to the ContextCleaner
+      .assignManaged(s, edges, docs.select(col("doc_id").as("id")), dedupEdges = false)._1
       .select(col("id").as("doc_id"), col("comp").as("cluster"))
     val wk = Window.partitionBy("cluster")
       .orderBy(col("len").desc, col("doc_id"))
@@ -2432,11 +2429,10 @@ object Queries {
     // localCheckpoint the (tiny, per-source) aggregate so the full
     // scan+tokenize+agg runs once instead of twice (the totals job used
     // to re-derive it from the documents scan).
-    val per = t(s, d, "documents")
+    val per = Materialize.checkpoint(t(s, d, "documents")
       .groupBy("source")
       .agg(count(lit(1)).as("docs"),
-        sum(size(split(trim(col("text")), "\\s+")).cast("long")).as("tokens"))
-      .localCheckpoint()
+        sum(size(split(trim(col("text")), "\\s+")).cast("long")).as("tokens"))).value
     val tot = per.agg(sum("tokens").as("tt"), count(lit(1)).as("ns")).head()
     val cap = tot.getLong(0) / tot.getLong(1)
     per.select(col("source"), col("docs"), col("tokens"),
@@ -2473,11 +2469,10 @@ object Queries {
     // r07: BOTH sweeps (forward + reversed key) consume the normalized-key
     // table — localCheckpoint it so the full-text normalization regex runs
     // once per document instead of once per sweep.
-    val docs = t(s, d, "documents")
+    val docs = Materialize.checkpoint(t(s, d, "documents")
       .select(col("doc_id"),
         expr("substring(regexp_replace(lower(text), '[^a-z0-9]', ''), 1, 20)")
-          .as("nk"))
-      .localCheckpoint()
+          .as("nk"))).value
     def sweep(key: org.apache.spark.sql.Column): DataFrame = {
       val keyed = docs.select(col("doc_id"), key.as("k"))
         .withColumn("pfx", expr("substring(k, 1, 2)"))

@@ -19,7 +19,6 @@ object HtmlExtract {
   private val Comment = "(?s)<!--.*?-->".r
   private val Tag = "<[^>]*>".r
   private val TitleTag = "(?is)<title[^>]*>(.*?)</title>".r
-  private val Anchor = "(?is)<a\\b[^>]*?href\\s*=\\s*\"([^\"]*)\"[^>]*>(.*?)</a>".r
   private val Ws = "\\s+".r
 
   /** Decode the html entities the corpus can contain. */
@@ -56,13 +55,4 @@ object HtmlExtract {
     TitleTag.findFirstMatchIn(html)
       .map(m => Ws.replaceAllIn(decodeEntities(m.group(1)), " ").trim)
       .getOrElse("")
-
-  /** (href, anchorText) pairs — the webpage analog of the reference's
-    * sentence links (anchor surface forms, north-star mention extraction).
-    * Anchor text goes through the same tag-strip + collapse as body text. */
-  def extractAnchors(html: String): Seq[(String, String)] =
-    Anchor.findAllMatchIn(html).map { m =>
-      val text = Ws.replaceAllIn(decodeEntities(Tag.replaceAllIn(m.group(2), " ")), " ").trim
-      (m.group(1), text)
-    }.toVector
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing._
 import graft.functions.{Similarity, TextFunctions}
+import graft.util.{Held, Materialize}
 
 /** Document features + blocking-key generation for record linkage.
   *
@@ -287,17 +288,9 @@ object Blocking {
     // Callers that never force the counter (the in-memory ER chain, q25)
     // should pass false and pay one histogram recompute instead of
     // managing a cache entry.
-    val sizes =
-      if (persistSizes)
-        sizesBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sizesBase
-    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val release = () =>
-      if (persistSizes && released.compareAndSet(false, true)) {
-        sizes.unpersist(blocking = true); ()
-      }
-    val hotBlocks = () => sizes.where(col("sz") > maxBlockSize).count()
-    val eligibleSizes = sizes.where(col("sz") >= 2 && col("sz") <= maxBlockSize)
+    val sizes = if (persistSizes) Materialize.cache(sizesBase) else new Held(sizesBase)
+    val hotBlocks = () => sizes.value.where(col("sz") > maxBlockSize).count()
+    val eligibleSizes = sizes.value.where(col("sz") >= 2 && col("sz") <= maxBlockSize)
     val eligible = entries.join(eligibleSizes, "key")
       .select(col("key"), col("id")).as[BlockEntry]
     val pairs = eligible
@@ -315,6 +308,6 @@ object Blocking {
       // partitioned, skew-free regardless of block sizes. No extra shuffle.
       .dropDuplicates("src", "dst")
       .as[CandidatePair]
-    CandidatePairGen(pairs, hotBlocks, release)
+    CandidatePairGen(pairs, hotBlocks, () => sizes.release())
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Edge
+import graft.util.{Held, Materialize}
 
 /** Connected components, component id = the component's minimum node id,
   * on one of two paths chosen by the edge count —
@@ -14,9 +15,11 @@ import graft.model.Edge
   * (/root/reference/db/create_tables.sql:41, src/db.py:38-47); this is its
   * scale-out generalization for near-duplicate edges (SURVEY §2.7 X2).
   *
-  * Both paths start with the same job: the edges are localCheckpointed and
-  * fingerprinted (count, xor of edge hashes), which materializes them once
-  * and yields their count. The edge plan is never computed again.
+  * [[assignManaged]] is the one entry. Both paths start with the same job:
+  * the edges are checkpointed (`graft.util.Materialize`, which also holds
+  * every round below) and fingerprinted (count, xor of edge hashes), which
+  * materializes them once and yields their count. The edge plan is never
+  * computed again.
   *  - **Driver path** (count ≤ [[DriverEdgeBound]], 2^20 edges): one more
   *    job collects the materialized edges as primitive `Long` arrays, the
   *    edge checkpoint is released at once, and union-find runs on the
@@ -42,8 +45,8 @@ import graft.model.Edge
   *      per round — pure driver/scheduling latency that does not shrink
   *      with executors.
   *    - convergence = the same fingerprint, computed by the action that
-  *      materializes the round's localCheckpoint; superseded checkpoints
-  *      are unpersisted as soon as the next round materializes.
+  *      materializes the round's checkpoint; a superseded round is
+  *      released as soon as the next round materializes.
   *    Skew note: a star root's degree equals its component size; rounds
   *    hash-partition by node id, so one giant component concentrates on one
   *    task only at the root — the same bound as the published algorithm.
@@ -96,14 +99,12 @@ object ConnectedComponents {
     * the object doc). */
   private val DriverEdgeBound: Long = 1L << 20
 
-  /** The assignment frame, the thunk that releases what backs it, and
-    * whether it came without rounds (no edges, or the driver path). */
-  private[graft] final case class Assignment(
-      frame: DataFrame, release: () => Unit, onDriver: Boolean)
-
   /** Component assignment for every vertex incident to `edges` plus every
-    * vertex in `allVertices` (singletons map to themselves). Returns
-    * DataFrame(id, comp) where comp = min id of the component.
+    * vertex in `allVertices` (singletons map to themselves): DataFrame(id,
+    * comp), comp = min id of the component. The frame stays backed by its
+    * path's broadcast or final round; the second element releases that
+    * (blocking, idempotent). Callers that return a lazy plan over it (q40,
+    * q63) leave the release to Spark's ContextCleaner.
     *
     * @param dedupEdges when true (default), the input edge set is
     *   shuffled through a `distinct` before iterating — required for
@@ -114,48 +115,6 @@ object ConnectedComponents {
     *   edges would not break correctness either way (union-find, largeStar's
     *   reduceByKey and smallStar's distinct absorb them) — the flag only
     *   controls whether the first job's input volume is pre-shrunk. */
-  def assign(
-      spark: SparkSession,
-      edges: Dataset[Edge],
-      allVertices: DataFrame, // single column "id"
-      maxIterations: Int = 30,
-      dedupEdges: Boolean = true): DataFrame =
-    assignBounded(spark, edges, allVertices, maxIterations, dedupEdges, DriverEdgeBound)
-
-  /** [[assign]] with the driver-path bound as a parameter. */
-  private[graft] def assignBounded(
-      spark: SparkSession,
-      edges: Dataset[Edge],
-      allVertices: DataFrame,
-      maxIterations: Int,
-      dedupEdges: Boolean,
-      driverEdgeBound: Long): DataFrame = {
-    // After the rounds, the converged assignment is materialized (eager
-    // localCheckpoint) and every ROUND checkpoint released (BLOCKING)
-    // before returning: the caller gets a DataFrame whose only dependency
-    // is its own materialized blocks — the lineage hanging off O(log n)
-    // iterative rounds is cut, exactly as an output table would. Callers
-    // that consume the assignment exactly once can skip it via
-    // [[assignManaged]]. Without rounds there is no round state to
-    // decouple from: the frame is a projection of `allVertices`, and the
-    // driver path's broadcast is freed with the frame by Spark's
-    // ContextCleaner.
-    val a = assignWithin(spark, edges, allVertices, maxIterations, dedupEdges, driverEdgeBound)
-    if (a.onDriver) return a.frame
-    val out = a.frame.localCheckpoint() // eager: materializes before the release
-    a.release()
-    out
-  }
-
-  private val NoRelease: () => Unit = () => ()
-
-  /** Like [[assign]] but the returned frame stays backed by what the path
-    * built — the driver path's broadcast or the final round's locally
-    * checkpointed RDD; the second element releases it (BLOCKING for the
-    * RDD, idempotent). For callers that materialize the assignment
-    * exactly once — a pipeline that counts it, or commits it straight to
-    * its own snapshot store — and then release in a `finally`: skips
-    * [[assign]]'s second materialization after the rounds. */
   def assignManaged(
       spark: SparkSession,
       edges: Dataset[Edge],
@@ -163,31 +122,29 @@ object ConnectedComponents {
       maxIterations: Int = 30,
       dedupEdges: Boolean = true): (DataFrame, () => Unit) = {
     val a = assignWithin(spark, edges, allVertices, maxIterations, dedupEdges, DriverEdgeBound)
-    (a.frame, a.release)
+    (a.value, () => a.release())
   }
 
-  /** Both paths behind [[assign]] and [[assignManaged]]: the driver path
-    * when the edge count is at most `driverEdgeBound`, the rounds above. */
+  /** [[assignManaged]] with the driver-path bound as a parameter. */
   private[graft] def assignWithin(
       spark: SparkSession,
       edges: Dataset[Edge],
       allVertices: DataFrame,
       maxIterations: Int,
       dedupEdges: Boolean,
-      driverEdgeBound: Long): Assignment = {
+      driverEdgeBound: Long): Held[DataFrame] = {
     import spark.implicits._
     val partitions = spark.sessionState.conf.numShufflePartitions
     val raw = edges.toDF()
       .select(col("src"), col("dst")).as[(Long, Long)].rdd
       .filter { case (s, d) => s != d }
-    val e: RDD[(Long, Long)] = if (dedupEdges) raw.distinct(partitions) else raw
-    e.localCheckpoint()
+    val e = Materialize.checkpoint(if (dedupEdges) raw.distinct(partitions) else raw)
     // The initial fingerprint materializes the checkpoint AND yields the
     // edge count for free, which picks the path.
-    val fp0 = fingerprint(e)
+    val fp0 = fingerprint(e.value)
     if (fp0._1 == 0L) { // no edges at all: everyone is a singleton
-      e.unpersist(blocking = true)
-      Assignment(allVertices.select(col("id"), col("id").as("comp")), NoRelease, onDriver = true)
+      e.release()
+      new Held(allVertices.select(col("id"), col("id").as("comp")))
     } else if (fp0._1 <= driverEdgeBound) driverPath(spark, e, allVertices)
     else rounds(spark, e, fp0, allVertices, maxIterations, partitions)
   }
@@ -195,25 +152,21 @@ object ConnectedComponents {
   /** The driver path: collect the materialized edges (one job), release
     * them, run union-find, and project `allVertices` through a broadcast of
     * the sorted (id, comp) arrays. */
-  private def driverPath(spark: SparkSession, e: RDD[(Long, Long)], allVertices: DataFrame)
-      : Assignment = {
-    val parts = e.mapPartitions { it =>
+  private def driverPath(
+      spark: SparkSession, e: Held[RDD[(Long, Long)]], allVertices: DataFrame): Held[DataFrame] = {
+    val parts = e.value.mapPartitions { it =>
       val b = new scala.collection.mutable.ArrayBuilder.ofLong
       it.foreach { case (s, d) => b += s; b += d }
       Iterator.single(b.result())
     }.collect()
-    e.unpersist(blocking = true)
+    e.release()
     val bc = spark.sparkContext.broadcast(components(parts))
     val compOf = udf { (id: Long) =>
       val (ids, comps) = bc.value
       val i = java.util.Arrays.binarySearch(ids, id)
       if (i >= 0) comps(i) else id
     }
-    val destroyed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    Assignment(
-      allVertices.select(col("id"), compOf(col("id")).as("comp")),
-      () => { if (destroyed.compareAndSet(false, true)) bc.destroy(); () },
-      onDriver = true)
+    new Held(allVertices.select(col("id"), compOf(col("id")).as("comp")), () => bc.destroy())
   }
 
   /** Union-find over edge lists given as interleaved (src, dst) pairs.
@@ -260,13 +213,13 @@ object ConnectedComponents {
     * fingerprint stops changing. */
   private def rounds(
       spark: SparkSession,
-      first: RDD[(Long, Long)],
+      first: Held[RDD[(Long, Long)]],
       fp0: (Long, Long),
       allVertices: DataFrame,
       maxIterations: Int,
-      partitions: Int): Assignment = {
+      partitions: Int): Held[DataFrame] = {
     import spark.implicits._
-    // Unpersisting a superseded localCheckpointed round logs Spark's
+    // Releasing a superseded checkpointed round logs Spark's
     // "cannot be recomputed after unpersisting" WARN. Here that is the
     // intended lifecycle — a superseded round is never recomputed (the
     // next round's checkpoint is already materialized by the same action
@@ -291,30 +244,25 @@ object ConnectedComponents {
     var converged = false
     while (!converged && iter < maxIterations) {
       val superseded = e
-      e = smallStar(largeStar(e, hp), hp)
-      e.localCheckpoint()
-      val fp = fingerprint(e) // materializes this round's checkpoint...
-      superseded.unpersist(blocking = true) // ...freeing the last round's
+      e = Materialize.checkpoint(smallStar(largeStar(e.value, hp), hp))
+      val fp = fingerprint(e.value) // materializes this round's checkpoint...
+      superseded.release() // ...freeing the last round's
       converged = fp == prev
       prev = fp
       iter += 1
     }
     // Converged edge set is a forest of stars (child -> root); the
     // assignment frame hangs off the final round's checkpoint, released
-    // by the returned thunk (repeated pipeline passes must end with zero
+    // with the returned hold (repeated pipeline passes must end with zero
     // surviving storage blocks — asserted in EntityResolutionSpec).
-    val assignments = e
+    val finalRound = e
+    val assignments = finalRound.value
       .flatMap { case (s, d) => Iterator((s, d), (d, d)) }
       .reduceByKey(hp, (a: Long, b: Long) => math.min(a, b))
       .toDF("id", "comp")
     val result = allVertices.select(col("id"))
       .join(assignments, Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-    val finalRound = e
-    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-    Assignment(result, () => {
-      if (released.compareAndSet(false, true)) finalRound.unpersist(blocking = true)
-      ()
-    }, onDriver = false)
+    new Held(result, () => finalRound.release())
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.{Page, ProcessedPage}
+import graft.util.Materialize
 
 /** Dataset-level wrappers around the pure per-page processing: the
   * reference's batch loop becomes partition parallelism, its point lookups
@@ -47,8 +48,10 @@ object MentionPipeline {
     * (/root/reference/src/process_pages.py:50-70): seeds -> outlinks ->
     * fetch-unvisited -> process, `depth` layers. The frontier set-minus is
     * a distributed except; page fetch is a semi join against the corpus
-    * (S3: batch point-lookups become a join). Each layer localCheckpoints
-    * to keep the plan O(1) in depth. */
+    * (S3: batch point-lookups become a join). Each layer checkpoints its
+    * frontier, processed and visited sets to keep the plan O(1) in depth,
+    * and releases the layer before it; only the returned processed set
+    * stays held. */
   def processSeedPages(
       spark: SparkSession,
       corpus: Dataset[Page],
@@ -56,20 +59,24 @@ object MentionPipeline {
       seeds: Dataset[Page],
       depth: Int): Dataset[ProcessedPage] = {
     import spark.implicits._
-    var processed = processPages(spark, seeds, redirects, isSeedPage = true)
-      .localCheckpoint()
+    var processed = Materialize.checkpoint(processPages(spark, seeds, redirects, isSeedPage = true))
     var latest = processed
-    var visited = processed.map(_.documentInfo.title).distinct().localCheckpoint()
+    var visited = Materialize.checkpoint(processed.value.map(_.documentInfo.title).distinct())
     for (_ <- 0 until depth) {
-      val referenced = latest.flatMap(_.entities).distinct()
-      val toFetch = referenced.except(visited)
+      val referenced = latest.value.flatMap(_.entities).distinct()
+      val toFetch = referenced.except(visited.value)
       val fetched = corpus
         .join(toFetch, corpus("title") === toFetch("value"), "left_semi")
         .as[Page]
-      latest = processPages(spark, fetched, redirects).localCheckpoint()
-      processed = processed.union(latest).localCheckpoint()
-      visited = visited.union(referenced).distinct().localCheckpoint()
+      val next = Materialize.checkpoint(processPages(spark, fetched, redirects))
+      val grown = Materialize.checkpoint(processed.value.union(next.value))
+      val seen = Materialize.checkpoint(visited.value.union(referenced).distinct())
+      Seq(latest, processed, visited).foreach(_.release())
+      latest = next
+      processed = grown
+      visited = seen
     }
-    processed
+    Seq(latest, visited).filter(_ ne processed).foreach(_.release())
+    processed.value
   }
 }

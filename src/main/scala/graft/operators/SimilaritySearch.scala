@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashing, OracleHash}
 import graft.functions.Similarity.denseCosine
+import graft.util.Materialize
 
 /** Similarity search over an embedding column.
   *
@@ -130,7 +131,7 @@ object SimilaritySearch {
     // when the query set IS the corpus (the near-dup dedup path, q40),
     // the query keys are the same table relabeled instead of a third
     // signature pass. Values are unchanged by construction.
-    val cKeys = keyed(corpus, "cid").localCheckpoint()
+    val cKeys = Materialize.checkpoint(keyed(corpus, "cid")).value
     val sizes = cKeys.groupBy("bucket").agg(count(lit(1)).as("sz"))
     val eligible = sizes.where(col("sz") <= maxBucketSize).select("bucket")
     val qKeys =
@@ -235,18 +236,17 @@ object SimilaritySearch {
       iterations: Int = DefaultTrainIterations): Array[(Long, Array[Long])] = {
     import spark.implicits._
     // r07: the quantized corpus is consumed once per Lloyd iteration plus
-    // the seed collect — persist it so quantization + encoder decode run
+    // the seed collect — cache it so quantization + encoder decode run
     // once instead of (iterations + 1) times; released before returning.
-    val qcorpus = corpus.map(r => (r.id, quantized(r.vec)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seeds = qcorpus.orderBy(col("_1")).limit(numCentroids)
+    val qcorpus = Materialize.cache(corpus.map(r => (r.id, quantized(r.vec))))
+    val seeds = qcorpus.value.orderBy(col("_1")).limit(numCentroids)
       .collect().sortBy(_._1)
     var cents: Array[(Long, Array[Long])] =
       seeds.zipWithIndex.map { case ((_, qv), j) => (j.toLong, qv) }
     var it = 0
     while (it < iterations) {
       val centB = spark.sparkContext.broadcast(cents)
-      val (sums, counts) = qcorpus.rdd.mapPartitions { rows =>
+      val (sums, counts) = qcorpus.value.rdd.mapPartitions { rows =>
         val cs = centB.value
         val dims = cs(0)._2.length
         val s = Array.fill(cs.length)(new Array[Long](dims))
@@ -275,7 +275,7 @@ object SimilaritySearch {
       centB.destroy()
       it += 1
     }
-    qcorpus.unpersist(blocking = false)
+    qcorpus.release()
     cents
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{ConnectedComponents, FingerprintDedup}
 import graft.sources.SnapshotStore
+import graft.util.{Held, Materialize}
 
 /** The END-TO-END training-corpus build (VERDICT r05 #6) — the catalog's
   * independent stages composed into the pipeline a real training-data run
@@ -82,18 +83,15 @@ object CorpusBuild {
     // [canonical]: capped pairs → CC → longest-text-wins (q63's rule);
     // pair-agg output is unique (src,dst), so CC skips its pre-distinct.
     // assignManaged: the snapshot commit below is the single
-    // materialization, so assign()'s internal parquet decoupling
-    // roundtrip would be a redundant second write (EntityResolution's
-    // idiom); the CC checkpoint is released once the commit returns
-    var relCC: () => Unit = () => ()
-    val canonical =
-      try store.getOrCreate("canonical") {
+    // materialization of the assignment; what backs it (the CC broadcast
+    // or last round) is released once the commit returns
+    val canonical = Materialize.holding { hold =>
+      store.getOrCreate("canonical") {
         val edges = FingerprintDedup.cappedPairs(fps)
           .select(col("src"), col("dst")).as[graft.model.Edge]
-        val (assigned, rel) = ConnectedComponents.assignManaged(
+        val (assigned, release) = ConnectedComponents.assignManaged(
           spark, edges, gated.select(col("doc_id").as("id")), dedupEdges = false)
-        relCC = rel
-        val comp = assigned
+        val comp = hold(new Held(assigned, release))
           .select(col("id").as("doc_id"), col("comp").as("cluster"))
         val wk = Window.partitionBy("cluster")
           .orderBy(col("text_len").desc, col("doc_id"))
@@ -101,7 +99,8 @@ object CorpusBuild {
           .withColumn("rk", row_number().over(wk))
           .select(col("doc_id"), col("cluster"),
             when(col("rk") === 1, 1L).otherwise(0L).as("keep"))
-      } finally relCC()
+      }
+    }
 
     // [survivors]: canonical keeps, minus the eval slice itself and every
     // training doc colliding with it (broadcast eval set — q60's shape)

@@ -1,17 +1,15 @@
 package graft.pipeline
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.HtmlExtract
 import graft.model.{Edge, WebPage}
 import graft.operators.{Blocking, ConnectedComponents, PairScoring}
 import graft.operators.Blocking.ExtractedDoc
 import graft.sources.{SnapshotStore, WebPagesGen}
+import graft.util.{Held, Materialize}
 
 /** The end-to-end record-linkage pipeline (north rule), composed ONCE as a
   * chain of stages:
@@ -23,17 +21,17 @@ import graft.sources.{SnapshotStore, WebPagesGen}
   *   (url, id, cluster).
   *
   * The operators own the stage logic; where each stage's output lives is
-  * the [[Materialization]] policy a run picks:
+  * the [[Materialization]] policy a run picks (every intermediate the
+  * chain holds is a `graft.util.Materialize` hold, see [[run]]):
   *  - [[Snapshot]] commits every stage through `SnapshotStore.getOrCreate`
   *    (per-partition lineage rows + counters), so a run is resumable:
   *    rerunning with the same store replays committed stages and
   *    recomputes only uncommitted ones. The block-size histogram is
   *    persisted while the pairs commit and the hot-block counter (forced
   *    after the commit) share it, then released.
-  *  - [[InMemory]] keeps nothing durable. It persists only the stages read
+  *  - [[InMemory]] keeps nothing durable. It caches only the stages read
   *    more than once — `extracted` (read twice by features) and `features`
-  *    (read by five plan subtrees) — and releases them and the last
-  *    connected-components round once the caller's action returns.
+  *    (read by five plan subtrees).
   *
   * Both policies skip CC's defensive edge `distinct`: scored edges are
   * unique (src, dst) by construction (candidate pairs are de-duplicated and
@@ -89,53 +87,45 @@ object EntityResolution {
     * chain holds is released (blocking) once `consume` returns or throws,
     * so repeated runs in one session leave no persisted RDD behind. */
   def run[T](spark: SparkSession, pages: Dataset[WebPage], policy: Materialization)(
-      consume: DataFrame => T): T = {
+      consume: DataFrame => T): T = Materialize.holding { hold =>
     import spark.implicits._
     val committing = policy.isInstanceOf[Snapshot]
-    val held = ArrayBuffer.empty[() => Unit]
     def stage(name: String, shared: Boolean = false)(compute: => DataFrame): DataFrame =
       policy match {
         case Snapshot(store) => store.getOrCreate(name)(compute)
-        case InMemory if shared =>
-          val df = compute.persist(StorageLevel.MEMORY_AND_DISK)
-          held += (() => { df.unpersist(blocking = true); () })
-          df
+        case InMemory if shared => hold(Materialize.cache(compute))
         case InMemory => compute
       }
-    try {
-      val extracted = stage("extracted", shared = true)(
-        extract(spark, pages).toDF()).as[ExtractedDoc]
-      val feats = stage("features", shared = true)(
-        Blocking.features(spark, extracted).toDF()).as[Blocking.DocFeatures]
-      val blocks = stage("blocks")(
-        Blocking.blockEntries(spark, feats).toDF()).as[Blocking.BlockEntry]
-      var gen: Option[Blocking.CandidatePairGen] = None
-      val pairs = stage("pairs") {
-        val g = Blocking.candidatePairs(spark, blocks, persistSizes = committing)
-        gen = Some(g)
-        held += g.release
-        g.pairs.toDF()
-      }.as[Blocking.CandidatePair]
-      // forced after the pairs commit, so the persisted histogram serves
-      // both the pair join and the counter; released right after
-      if (committing) gen.foreach { g =>
-        val hot = g.hotBlocks()
-        if (hot > 0) System.err.println(s"[graft] dropped $hot hot blocks over cap")
-        g.release()
-      }
-      val scored = stage("scored")(PairScoring.score(spark, pairs, feats).toDF())
-      val edges = scored.where(col("isDuplicate"))
-        .select(col("src"), col("dst")).as[Edge]
-      val clusters = stage("clusters") {
-        val (assigned, release) = ConnectedComponents.assignManaged(
-          spark, edges, feats.select(col("id")), dedupEdges = false)
-        held += release
-        feats.select(col("id"), col("url"))
-          .join(assigned, "id")
-          .select(col("url"), col("id"), col("comp").as("cluster"))
-      }
-      consume(clusters)
-    } finally held.reverseIterator.foreach(_())
+    val extracted = stage("extracted", shared = true)(
+      extract(spark, pages).toDF()).as[ExtractedDoc]
+    val feats = stage("features", shared = true)(
+      Blocking.features(spark, extracted).toDF()).as[Blocking.DocFeatures]
+    val blocks = stage("blocks")(
+      Blocking.blockEntries(spark, feats).toDF()).as[Blocking.BlockEntry]
+    var gen: Option[Blocking.CandidatePairGen] = None
+    val pairs = stage("pairs") {
+      val g = Blocking.candidatePairs(spark, blocks, persistSizes = committing)
+      gen = Some(g)
+      hold(new Held(g.pairs, g.release)).toDF()
+    }.as[Blocking.CandidatePair]
+    // forced after the pairs commit, so the persisted histogram serves
+    // both the pair join and the counter; released right after
+    if (committing) gen.foreach { g =>
+      val hot = g.hotBlocks()
+      if (hot > 0) System.err.println(s"[graft] dropped $hot hot blocks over cap")
+      g.release()
+    }
+    val scored = stage("scored")(PairScoring.score(spark, pairs, feats).toDF())
+    val edges = scored.where(col("isDuplicate"))
+      .select(col("src"), col("dst")).as[Edge]
+    val clusters = stage("clusters") {
+      val (assigned, release) = ConnectedComponents.assignManaged(
+        spark, edges, feats.select(col("id")), dedupEdges = false)
+      feats.select(col("id"), col("url"))
+        .join(hold(new Held(assigned, release)), "id")
+        .select(col("url"), col("id"), col("comp").as("cluster"))
+    }
+    consume(clusters)
   }
 
   /** Run all stages against an existing webpages table, committing each to

@@ -17,11 +17,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Commit protocol: data files land under `<root>/<stage>/data`, then the
   * manifest is written last; a stage without `_MANIFEST.json` is considered
   * uncommitted and is recomputed — which is what makes every stage
-  * resumable after a mid-stage kill (north rule). Before `getOrCreate`
-  * replays a stage it also checks the manifest against the data: a
-  * manifest that does not parse, or whose per-file rows differ from the
-  * parquet footers, marks the stage uncommitted (one stderr line), and it
-  * is recomputed.
+  * resumable after a mid-stage kill (north rule). A manifest is only a
+  * claim: `exists` also checks it against the data, and a manifest that
+  * does not parse, or whose per-file rows differ from the parquet footers,
+  * marks the stage uncommitted (one stderr line), so `getOrCreate`
+  * recomputes it.
   *
   * Limits of that contract:
   *  - the manifest appears atomically only where `rename` is atomic: the
@@ -37,7 +37,8 @@ class SnapshotStore(spark: SparkSession, root: String) {
   private def manifestPath(stage: String) = new Path(stageDir(stage), "_MANIFEST.json")
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def exists(stage: String): Boolean = fs.exists(manifestPath(stage))
+  /** The stage is committed: its manifest is on disk and [[replayable]]. */
+  def exists(stage: String): Boolean = fs.exists(manifestPath(stage)) && replayable(stage)
 
   def read(stage: String): DataFrame =
     spark.read.parquet(dataDir(stage).toString)
@@ -85,10 +86,9 @@ class SnapshotStore(spark: SparkSession, root: String) {
     reread
   }
 
-  /** Resume-or-compute: replay the committed snapshot when present and
-    * consistent with its data files; otherwise (re)compute and commit. */
+  /** Resume-or-compute: replay a committed stage, else (re)compute it. */
   def getOrCreate(stage: String)(compute: => DataFrame): DataFrame =
-    if (exists(stage) && replayable(stage)) read(stage) else write(stage, compute)
+    if (exists(stage)) read(stage) else write(stage, compute)
 
   /** A manifest found on disk is only a claim: replay the stage when the
     * manifest parses and lists exactly the data files present, each with
@@ -116,9 +116,9 @@ class SnapshotStore(spark: SparkSession, root: String) {
     problem.isEmpty
   }
 
-  /** Counters recorded for a committed stage (rows, files, elapsedMs). */
+  /** The manifest's counters (rows, files, elapsedMs) as written. */
   def manifest(stage: String): Option[String] =
-    if (!exists(stage)) None
+    if (!fs.exists(manifestPath(stage))) None
     else {
       val path = manifestPath(stage)
       val len = fs.getFileStatus(path).getLen.toInt

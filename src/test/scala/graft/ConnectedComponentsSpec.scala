@@ -42,8 +42,9 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import spark.implicits._
     val edgeDs = edges.map { case (a, b) => Edge(a, b) }.toDS()
     val vertices = (0L until n.toLong).toDF("id")
-    ConnectedComponents.assignBounded(spark, edgeDs, vertices, 30, dedupEdges, bound)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val a = ConnectedComponents.assignWithin(spark, edgeDs, vertices, 30, dedupEdges, bound)
+    try a.value.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally a.release()
   }
 
   private def check(n: Int, edges: Seq[(Long, Long)], dedupEdges: Boolean = true): Unit = {
@@ -52,10 +53,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(assigned(n, edges, bound, dedupEdges) == oracle, s"$path path")
   }
 
-  /** Frees the storage an [[ConnectedComponents.assign]] result owns. */
-  private def unpersistNew(preexisting: Set[Int]): Unit =
-    (spark.sparkContext.getPersistentRDDs.keySet -- preexisting).foreach(id =>
-      spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("empty graph: all singletons") { check(5, Nil) }
 
@@ -87,25 +85,15 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import spark.implicits._
     val edges = Seq(Edge(0L, 1L), Edge(1L, 2L), Edge(5L, 6L)).toDS()
     val vertices = (0L until 8L).toDF("id")
-    val preexisting = spark.sparkContext.getPersistentRDDs.keySet
+    val preexisting = persisted
     val (managed, release) =
       ConnectedComponents.assignManaged(spark, edges, vertices)
     val got = managed.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     release(); release() // idempotent
-    val leakedManaged = spark.sparkContext.getPersistentRDDs.keySet -- preexisting
+    val leakedManaged = persisted -- preexisting
     assert(leakedManaged.isEmpty,
       s"assignManaged release() left persisted RDDs: $leakedManaged")
-    // assign(): identical values; at most the returned assignment's own
-    // eager localCheckpoint survives (after rounds; the driver path that
-    // this size takes leaves none — both pinned by the path tests below)
-    val viaAssign = ConnectedComponents.assign(spark, edges, vertices)
-    val gotAssign = viaAssign.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == gotAssign)
-    val leftover = spark.sparkContext.getPersistentRDDs.keySet -- preexisting
-    assert(leftover.size <= 1,
-      s"assign() left round-state blocks beyond its own checkpoint: $leftover")
-    leftover.foreach(id =>
-      spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
+    assert(got == unionFindOracle(8, Seq((0L, 1L), (1L, 2L), (5L, 6L))))
   }
 
   test("dedupEdges=false is exact when input edges are unique") {
@@ -117,15 +105,18 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("the edge bound picks the path: driver at the bound, rounds one above") {
     import spark.implicits._
     val bound = 5L
-    for ((nEdges, onDriver) <- Seq(bound -> true, (bound + 1) -> false)) {
+    // the rounds path holds its final round until the release; the driver
+    // path holds no RDD, only a broadcast
+    for ((nEdges, heldRdds) <- Seq(bound -> 0, (bound + 1) -> 1)) {
       val edges = (0L until nEdges).map(i => (i, i + 1))
       val vertices = (0L to nEdges + 2).toDF("id")
+      val preexisting = persisted
       val a = ConnectedComponents.assignWithin(
         spark, edges.map { case (s, d) => Edge(s, d) }.toDS(), vertices, 30,
         dedupEdges = true, driverEdgeBound = bound)
       try {
-        assert(a.onDriver == onDriver, s"$nEdges edges under bound $bound")
-        val got = a.frame.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert((persisted -- preexisting).size == heldRdds, s"$nEdges edges under bound $bound")
+        val got = a.value.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(got == unionFindOracle(nEdges.toInt + 3, edges))
       } finally a.release()
     }
@@ -135,35 +126,26 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import spark.implicits._
     val edges = Seq(Edge(0L, 1L), Edge(1L, 2L), Edge(5L, 6L)).toDS()
     val vertices = (0L until 8L).toDF("id")
-    val preexisting = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val preexisting = persisted
     val a = ConnectedComponents.assignWithin(spark, edges, vertices, 30, true, Driver)
-    assert(a.onDriver)
-    val managed = a.frame.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(persisted == preexisting, "the driver path holds no RDD")
+    val managed = a.value.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     a.release(); a.release() // idempotent
-    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == preexisting)
-    val viaAssign = ConnectedComponents.assignBounded(spark, edges, vertices, 30, true, Driver)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaAssign == managed)
-    val leftover = spark.sparkContext.getPersistentRDDs.keySet.toSet -- preexisting
-    unpersistNew(preexisting)
-    assert(leftover.isEmpty, s"assign() on the driver path left persisted RDDs: $leftover")
+    assert(persisted == preexisting)
+    assert(managed == unionFindOracle(8, Seq((0L, 1L), (1L, 2L), (5L, 6L))))
   }
 
   test("the rounds path: release frees every round block, assign keeps only its own") {
     import spark.implicits._
     val edges = Seq(Edge(0L, 1L), Edge(1L, 2L), Edge(5L, 6L)).toDS()
     val vertices = (0L until 8L).toDF("id")
-    val preexisting = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val preexisting = persisted
     val a = ConnectedComponents.assignWithin(spark, edges, vertices, 30, true, Rounds)
-    assert(!a.onDriver)
-    val managed = a.frame.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val held = persisted -- preexisting
+    assert(held.size == 1, s"the rounds path holds only its final round: $held")
+    val managed = a.value.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     a.release(); a.release()
-    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == preexisting)
-    val viaAssign = ConnectedComponents.assignBounded(spark, edges, vertices, 30, true, Rounds)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaAssign == managed)
-    val leftover = spark.sparkContext.getPersistentRDDs.keySet.toSet -- preexisting
-    unpersistNew(preexisting)
-    assert(leftover.size == 1, s"assign() after rounds: $leftover")
+    assert(persisted == preexisting)
+    assert(managed == unionFindOracle(8, Seq((0L, 1L), (1L, 2L), (5L, 6L))))
   }
 }

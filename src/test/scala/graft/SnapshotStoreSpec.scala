@@ -94,6 +94,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val text = Files.readString(manifest)
     Files.writeString(manifest, text.take(text.length / 2))
     Files.deleteIfExists(sidecar)
+    assert(!store.exists("s"), "a truncated manifest is not committed")
     assert(stage() == first && computes == 2, "a truncated manifest recomputes")
 
     val committed = Files.readString(manifest)
@@ -102,6 +103,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkSessionTestWrapper {
     Files.writeString(manifest, committed.substring(0, firstFileRows.start(1)) +
       (firstFileRows.group(1).toLong + 1L) + committed.substring(firstFileRows.end(1)))
     Files.deleteIfExists(sidecar)
+    assert(!store.exists("s"), "a per-file rows mismatch is not committed")
     assert(stage() == first && computes == 3, "a per-file rows mismatch recomputes")
     assert(stage() == first && computes == 3, "the recommitted stage replays")
   }

@@ -90,10 +90,11 @@ class StreamingDedupSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(edges.count() > 0)
     // transitive closure + labeled-pair F1, exactly like the batch pipeline
     val ids = docs.map(d => d.id -> d.url).toMap
-    val assigned = graft.operators.ConnectedComponents.assign(
+    val (assigned, release) = graft.operators.ConnectedComponents.assignManaged(
       spark, edges, docs.map(_.id).toSeq.toDF("id"))
-    val urls = assigned.collect().map(r => (ids(r.getLong(0)), r.getLong(1)))
+    val urls = try assigned.collect().map(r => (ids(r.getLong(0)), r.getLong(1)))
       .toSeq.toDF("url", "cluster")
+    finally release()
     val q = EntityResolution.quality(urls, WebPagesGen.truth(spark, NClusters))
     assert(q.f1 >= 0.99, s"streaming F1 below target: $q")
     assert(q.missing == 0 && q.extra == 0, s"assignments are not a partition of the corpus: $q")
