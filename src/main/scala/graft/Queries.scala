@@ -506,13 +506,8 @@ object Queries {
     // (the skim/fps-family idiom): same lineage truncation, no disk
     // write+read roundtrip of the shingle arrays inside the timed query.
     val docs = Materialize.checkpoint(shingleDocs(s, d).toDF("doc_id", "sh")).value
-    // r07: the band-entry table feeds TWO consumers inside candidatePairs
-    // (the block-size histogram and the eligibility join) — localCheckpoint
-    // it so the MinHash signature pass (20 affine perms + an md5-family
-    // hash per shingle) runs once per document instead of twice.
-    val entries = Materialize.checkpoint(bandEntriesOf(s, docs.as[(Long, Seq[String])])).value
-    val gen = Blocking.candidatePairs(s, entries, MaxBlockSz,
-      persistSizes = false)
+    val entries = bandEntriesOf(s, docs.as[(Long, Seq[String])])
+    val gen = Blocking.candidatePairs(s, entries, MaxBlockSz)
     val a = docs.select(col("doc_id").as("src_doc"), col("sh").as("sh_a"))
     val b = docs.select(col("doc_id").as("dst_doc"), col("sh").as("sh_b"))
     gen.pairs.toDF().select(col("src").as("src_doc"), col("dst").as("dst_doc"))
@@ -2187,18 +2182,19 @@ object Queries {
     * analog of q27's stop-block cap.
     *
     * 100-TB shape: fingerprinting is map-side; one (doc,h) distinct
-    * shuffle; the per-h document count is a partial-agg over the
-    * already-winnowed (1/64) table; the pair join is blocked BY
-    * FINGERPRINT with the ≤50-doc cap, so each block yields ≤C(50,2)
-    * pairs — never a doc×doc self-join — and the final per-pair count is
-    * one shuffle over shared-fingerprint rows only. */
+    * shuffle; one hash shuffle of the already-winnowed (1/64) table by h
+    * forms each fingerprint's block, and a block of more than 50 docs
+    * pairs nothing, so each block yields ≤C(50,2) pairs — never a doc×doc
+    * self-join — and the final per-pair count is one shuffle over the
+    * emitted pairs only. */
   /** The capped duplicated-passage pair set — SHARED by q59 (reporting)
-    * and q63 (clustering input), so the join economics are one code path:
-    * per-fingerprint doc count capped to 2..50 (stop-fingerprint rule),
-    * pair join blocked BY FINGERPRINT (≤C(50,2) pairs per block, never
-    * doc×doc), pairs kept at ≥2 shared fingerprints. PlanGuardSpec pins
-    * the cap filter and the h-keyed join on q59's plan; q63 inherits the
-    * shape by construction. */
+    * and q63 (clustering input), so the pair economics are one code path:
+    * `FingerprintDedup.cappedPairs`, the shared-key pair operator blocked
+    * BY FINGERPRINT with the 50-document stop-fingerprint cap (≤C(50,2)
+    * pairs per block, never doc×doc), pairs kept at ≥2 shared
+    * fingerprints. PlanGuardSpec pins on q59's plan that pairs come out of
+    * a hash exchange with no join; q63 inherits the shape by
+    * construction. */
   private def cappedDupPairs(s: SparkSession, d: String): DataFrame =
     graft.operators.FingerprintDedup.cappedPairs(winnowedFps(s, d))
 

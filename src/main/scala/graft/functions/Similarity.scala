@@ -111,26 +111,10 @@ object Similarity {
   }
 
   /** Cosine over two sparse vectors as parallel (sorted keys, weights)
-    * arrays — the merge-join dot product for TF-IDF cosine. */
-  def sparseCosine(ka: Array[Long], wa: Array[Double], kb: Array[Long], wb: Array[Double]): Double = {
-    var i = 0; var j = 0
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    while (i < ka.length) { na += wa(i) * wa(i); i += 1 }
-    while (j < kb.length) { nb += wb(j) * wb(j); j += 1 }
-    if (na == 0.0 || nb == 0.0) return 0.0
-    i = 0; j = 0
-    while (i < ka.length && j < kb.length) {
-      if (ka(i) == kb(j)) { dot += wa(i) * wb(j); i += 1; j += 1 }
-      else if (ka(i) < kb(j)) i += 1
-      else j += 1
-    }
-    dot / math.sqrt(na * nb)
-  }
-
-  /** Float-weight overload of [[sparseCosine]] (accumulation stays double).
-    * TF-IDF weights ship as floats — half the shuffle bytes of the pairwise
-    * scoring joins, the pipeline's biggest byte-mover — and the ~1e-7
-    * relative error is noise against the ≥0.15 decision margins
+    * arrays — the merge-join dot product for TF-IDF cosine, accumulated
+    * in double. TF-IDF weights ship as floats — half the shuffle bytes of
+    * the pairwise scoring joins, the pipeline's biggest byte-mover — and
+    * the ~1e-7 relative error is noise against the ≥0.15 decision margins
     * (PairScoring.decide). */
   def sparseCosine(ka: Array[Long], wa: Array[Float], kb: Array[Long], wb: Array[Float]): Double = {
     var i = 0; var j = 0

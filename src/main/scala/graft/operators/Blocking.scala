@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing._
 import graft.functions.{Similarity, TextFunctions}
-import graft.util.{Held, Materialize}
 
 /** Document features + blocking-key generation for record linkage.
   *
@@ -19,10 +18,12 @@ import graft.util.{Held, Materialize}
   *
   * Shuffle layout: the per-document [[sketch]] is map-only; TF-IDF adds
   * one partial-agg shuffle (document frequency by token, broadcast back);
-  * key explosion is map-only. Hot blocks (boilerplate-heavy domains)
-  * are handled by a stop-block cap — blocks above `maxBlockSize` are
-  * dropped and counted, the standard stop-word analog for blocking — and
-  * candidate pairs are salted-repartitioned by pair hash before scoring.
+  * key explosion is map-only. Candidate pairs come from
+  * [[sharedKeyPairs]], the one operator that turns (key, id) entries into
+  * (src, dst, shared keys): one shuffle by key forms the blocks, a block
+  * over the cap (boilerplate-heavy domains) emits nothing, and one
+  * aggregate by pair leaves the pairs hash-partitioned by pair for
+  * scoring.
   */
 object Blocking {
 
@@ -258,56 +259,60 @@ object Blocking {
     feats.flatMap(f => blockKeys(f.normTitle, f.minhash).map(k => BlockEntry(k, f.id)))
   }
 
-  /** Candidate-pair generation handle: the pairs dataset, a hot-block
-    * counter (one extra job when forced), and a deterministic `release` of
-    * the persisted block histogram. `release` is idempotent and BLOCKING —
-    * callers own the lifecycle explicitly (try/finally) instead of cleanup
-    * being coupled to whether the counter thunk happens to run; forcing
-    * the counter after release still works (the histogram recomputes). */
+  /** Candidate-pair generation handle: the pairs and a hot-block counter
+    * (the keys whose block is over the cap, recomputed from the entries:
+    * one job when forced). `release` holds nothing and does nothing; it is
+    * kept only so the perfbench ER harness compiles unchanged. */
   final case class CandidatePairGen(
       pairs: Dataset[CandidatePair],
       hotBlocks: () => Long,
       release: () => Unit)
 
-  /** Candidate pairs from block co-membership with stop-block removal.
-    * Pair generation streams out of `flatMapGroups` lazily; within-block
-    * work is O(|block|²) bounded by `maxBlockSize`. Pairs are
-    * de-duplicated across keys (one scoring per pair regardless of how
-    * many keys co-locate it) and salted-repartitioned by pair hash so the
-    * scoring stage is skew-free by construction. */
+  /** The one shared-key pair operator: (src, dst, shared) with src < dst
+    * and `shared` the number of keys the two ids have in common.
+    *
+    * One hash shuffle groups the (key, id) entries by key; a block of 2 to
+    * `maxBlock` ids emits its pairs, a larger one (the stop-block rule,
+    * the standard stop-word analog for blocking) emits nothing and is
+    * never buffered: at most `maxBlock + 1` ids are read before the rest
+    * of the block is drained. One aggregate by (src, dst) then counts the
+    * shared keys. Within-block work is O(|block|²) bounded by `maxBlock`,
+    * and the aggregate hash-partitions by the pair, so whatever consumes
+    * the pairs is skew-free regardless of block sizes. */
+  def sharedKeyPairs(
+      spark: SparkSession, entries: Dataset[BlockEntry], maxBlock: Int): DataFrame = {
+    import spark.implicits._
+    entries
+      .groupByKey(_.key)
+      .flatMapGroups { (_, it) =>
+        val block = Array.newBuilder[Long]
+        while (block.length <= maxBlock && it.hasNext) block += it.next().id
+        it.foreach(_ => ())
+        val ids = block.result()
+        if (ids.length < 2 || ids.length > maxBlock) Iterator.empty
+        else {
+          java.util.Arrays.sort(ids)
+          for {
+            i <- ids.indices.iterator
+            j <- (i + 1) until ids.length
+            if ids(i) < ids(j)
+          } yield CandidatePair(ids(i), ids(j))
+        }
+      }
+      .groupBy("src", "dst").agg(count(lit(1)).as("shared"))
+  }
+
+  /** Candidate pairs from block co-membership: [[sharedKeyPairs]] under
+    * the `maxBlockSize` cap, each pair once however many keys it shares. */
   def candidatePairs(
       spark: SparkSession,
       entries: Dataset[BlockEntry],
-      maxBlockSize: Int = DefaultMaxBlockSize,
-      persistSizes: Boolean = true): CandidatePairGen = {
+      maxBlockSize: Int = DefaultMaxBlockSize): CandidatePairGen = {
     import spark.implicits._
-    val sizesBase = entries.groupBy("key").agg(count(lit(1)).as("sz"))
-    // persistSizes=true shares one computation of the block histogram
-    // between the pair join and the hot-block counter; the caller MUST
-    // call `release()` (try/finally) once pairs have materialized.
-    // Callers that never force the counter (the in-memory ER chain, q25)
-    // should pass false and pay one histogram recompute instead of
-    // managing a cache entry.
-    val sizes = if (persistSizes) Materialize.cache(sizesBase) else new Held(sizesBase)
-    val hotBlocks = () => sizes.value.where(col("sz") > maxBlockSize).count()
-    val eligibleSizes = sizes.value.where(col("sz") >= 2 && col("sz") <= maxBlockSize)
-    val eligible = entries.join(eligibleSizes, "key")
-      .select(col("key"), col("id")).as[BlockEntry]
-    val pairs = eligible
-      .groupByKey(_.key)
-      .flatMapGroups { (_, it) =>
-        val ids = it.map(_.id).toArray
-        java.util.Arrays.sort(ids)
-        for {
-          i <- ids.indices.iterator
-          j <- (i + 1) until ids.length
-        } yield CandidatePair(ids(i), ids(j))
-      }
-      // dropDuplicates hash-shuffles by exactly (src, dst): the output IS
-      // the salted uniform repartition the scoring stage needs — pair-hash
-      // partitioned, skew-free regardless of block sizes. No extra shuffle.
-      .dropDuplicates("src", "dst")
-      .as[CandidatePair]
-    CandidatePairGen(pairs, hotBlocks, () => sizes.release())
+    val pairs = sharedKeyPairs(spark, entries, maxBlockSize)
+      .select("src", "dst").as[CandidatePair]
+    val hotBlocks = () =>
+      entries.groupBy("key").count().where(col("count") > maxBlockSize).count()
+    CandidatePairGen(pairs, hotBlocks, () => ())
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Winnowed-fingerprint passage dedup primitives — ONE code path shared by
   * the catalog queries (q59/q60/q63/q67 via Queries.winnowedFps /
   * cappedDupPairs) and the end-to-end [[graft.pipeline.CorpusBuild]], so
-  * the join economics PlanGuardSpec pins on q59 hold everywhere the
+  * the pair economics PlanGuardSpec pins on q59 hold everywhere the
   * derivation runs.
   *
   * Shapes (the exact-substring dedup family, Lee et al. 2022):
@@ -14,10 +14,11 @@ import org.apache.spark.sql.functions._
   *    `graft_rolling_fp` expression emitting only the 1/64 winnowed
   *    8-gram fingerprints — never the 64× gram explode (the measured
   *    pushdown pessimization, see the expression's Scaladoc).
-  *  - cappedPairs: per-fingerprint doc count capped to [2, 50] (the
-  *    stop-fingerprint rule — boilerplate fingerprints never join), pair
-  *    join blocked BY FINGERPRINT (≤C(50,2) pairs per block, never
-  *    doc×doc), pairs kept at ≥2 shared fingerprints.
+  *  - cappedPairs: the shared-key pair operator `Blocking.sharedKeyPairs`
+  *    keyed BY FINGERPRINT at a 50-document cap (the stop-fingerprint
+  *    rule — a boilerplate fingerprint pairs nothing; ≤C(50,2) pairs per
+  *    block, never doc×doc, no join), pairs kept at ≥2 shared
+  *    fingerprints.
   */
 object FingerprintDedup {
 
@@ -32,20 +33,15 @@ object FingerprintDedup {
       .select("doc_id", "h").distinct()
 
   /** Capped duplicated-passage pair set over a fingerprint skim:
-    * (src, dst, sfp) with src < dst and sfp = shared fingerprints ≥
-    * `minShared`. */
-  def cappedPairs(
-      fps: DataFrame,
-      minBlock: Int = 2, maxBlock: Int = 50, minShared: Int = 2): DataFrame = {
-    val hcnt = fps.groupBy("h").agg(count(lit(1)).as("nd"))
-      .where(col("nd").between(minBlock, maxBlock))
-      .select("h")
-    val blocked = fps.join(hcnt, "h")
-    blocked.as("a")
-      .join(blocked.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
-      .agg(count(lit(1)).as("sfp"))
-      .where(col("sfp") >= minShared)
+    * (src, dst, sfp) with src < dst and sfp ≥ 2 shared fingerprints, from
+    * `Blocking.sharedKeyPairs` over the skim's (h, doc_id) rows at the
+    * 50-document stop-fingerprint cap. */
+  def cappedPairs(fps: DataFrame): DataFrame = {
+    val spark = fps.sparkSession
+    import spark.implicits._
+    val entries = fps.select(col("h").as("key"), col("doc_id").as("id")).as[Blocking.BlockEntry]
+    Blocking.sharedKeyPairs(spark, entries, maxBlock = 50)
+      .where(col("shared") >= 2)
+      .withColumnRenamed("shared", "sfp")
   }
 }

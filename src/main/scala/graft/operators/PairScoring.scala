@@ -13,7 +13,7 @@ import graft.operators.Blocking.{CandidatePair, DocFeatures}
   * closure overhead.
   *
   * Plan shape: two shuffle joins attach the feature payloads to the
-  * (already pair-hash-salted) candidate pairs; scoring itself is map-only.
+  * (already pair-hash-partitioned) candidate pairs; scoring itself is map-only.
   * Only the columns scoring needs are carried through the joins (column
   * pruning keeps the shuffled payload minimal).
   */

@@ -21,7 +21,9 @@ import graft.util.Materialize
   *    2^16 per band, so candidate volume stays ~linear in corpus size —
   *    4-bit bands (16 buckets) would degenerate to ~N²/16 pairs;
   *  - hot-bucket cap: buckets above `maxBucketSize` corpus members are
-  *    dropped (the stop-block analog in Blocking.candidatePairs);
+  *    dropped (the stop-block analog in Blocking.sharedKeyPairs, which
+  *    this path does not share: it pairs a query set against a corpus,
+  *    caps only the corpus side, and for q40 emits both orders of a pair);
   *  - (qid, cid) candidate ids are deduplicated across bands BEFORE the
   *    float vectors are re-attached — the wide rows never ride through the
   *    dedup shuffle.

@@ -16,7 +16,8 @@ import graft.util.{Held, Materialize}
   *
   *   webpages → extract (byte-identical text per url) → features
   *   (normalize + TF-IDF + MinHash) → blocking keys → candidate pairs
-  *   (stop-block cap + pair-hash repartition) → batched pairwise scoring →
+  *   (blocks in one shuffle, stop-block cap, one aggregate by pair) →
+  *   batched pairwise scoring →
   *   duplicate edges → connected components → cluster assignments
   *   (url, id, cluster).
   *
@@ -26,9 +27,8 @@ import graft.util.{Held, Materialize}
   *  - [[Snapshot]] commits every stage through `SnapshotStore.getOrCreate`
   *    (per-partition lineage rows + counters), so a run is resumable:
   *    rerunning with the same store replays committed stages and
-  *    recomputes only uncommitted ones. The block-size histogram is
-  *    persisted while the pairs commit and the hot-block counter (forced
-  *    after the commit) share it, then released.
+  *    recomputes only uncommitted ones. The hot-block counter is forced
+  *    after the pairs commit, over the committed block entries.
   *  - [[InMemory]] keeps nothing durable. It caches only the stages read
   *    more than once — `extracted` (read twice by features) and `features`
   *    (read by five plan subtrees).
@@ -43,7 +43,7 @@ import graft.util.{Held, Materialize}
   * writer's schema, the manifest reads footers), and CC is two small jobs
   * plus union-find on the driver while the duplicate edges number at most
   * 2^20 (its large-star/small-star rounds run only above that). One
-  * resolve pass over the 60-cluster test corpus is 21 jobs
+  * resolve pass over the 60-cluster test corpus is 19 jobs
   * (SnapshotStoreSpec). Folding `blocks` into the `pairs` commit was
   * measured and rejected: the pairs job then computes the block entries
   * twice (7.28 s against 6.24 s per pass).
@@ -89,7 +89,6 @@ object EntityResolution {
   def run[T](spark: SparkSession, pages: Dataset[WebPage], policy: Materialization)(
       consume: DataFrame => T): T = Materialize.holding { hold =>
     import spark.implicits._
-    val committing = policy.isInstanceOf[Snapshot]
     def stage(name: String, shared: Boolean = false)(compute: => DataFrame): DataFrame =
       policy match {
         case Snapshot(store) => store.getOrCreate(name)(compute)
@@ -102,18 +101,11 @@ object EntityResolution {
       Blocking.features(spark, extracted).toDF()).as[Blocking.DocFeatures]
     val blocks = stage("blocks")(
       Blocking.blockEntries(spark, feats).toDF()).as[Blocking.BlockEntry]
-    var gen: Option[Blocking.CandidatePairGen] = None
-    val pairs = stage("pairs") {
-      val g = Blocking.candidatePairs(spark, blocks, persistSizes = committing)
-      gen = Some(g)
-      hold(new Held(g.pairs, g.release)).toDF()
-    }.as[Blocking.CandidatePair]
-    // forced after the pairs commit, so the persisted histogram serves
-    // both the pair join and the counter; released right after
-    if (committing) gen.foreach { g =>
-      val hot = g.hotBlocks()
+    val gen = Blocking.candidatePairs(spark, blocks)
+    val pairs = stage("pairs")(gen.pairs.toDF()).as[Blocking.CandidatePair]
+    if (policy.isInstanceOf[Snapshot]) {
+      val hot = gen.hotBlocks()
       if (hot > 0) System.err.println(s"[graft] dropped $hot hot blocks over cap")
-      g.release()
     }
     val scored = stage("scored")(PairScoring.score(spark, pairs, feats).toDF())
     val edges = scored.where(col("isDuplicate"))

@@ -29,7 +29,8 @@ import graft.operators.Blocking.ExtractedDoc
   *    hot-block drop — a stream cannot retract already-emitted edges, so
   *    the cap gates FUTURE comparisons only);
   *  - a pair co-located by several keys may emit once per key: exactly
-  *    like the batch path before its dropDuplicates, and harmless to the
+  *    like the batch path's per-block pairs before its per-pair
+  *    aggregate (`Blocking.sharedKeyPairs`), and harmless to the
   *    downstream transitive closure (ConnectedComponents absorbs
   *    duplicate edges); chain `dropDuplicatesWithinWatermark` on
   *    (src, dst) when a unique edge stream is required.

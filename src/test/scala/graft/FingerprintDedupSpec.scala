@@ -65,6 +65,19 @@ class FingerprintDedupSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(got.forall { case (a, b, _) => a < b })
   }
 
+  test("a fingerprint held by exactly 50 docs pairs them; one held by 51 pairs none") {
+    import spark.implicits._
+    // two fingerprints per block, so every pair clears the ≥2-shared bar
+    // and only the 50-document cap decides
+    def block(h: Long, docs: Range) = for (fp <- Seq(h, h + 1); d <- docs) yield (d.toLong, fp)
+    val fps = spark.createDataset(block(10L, 0 until 50) ++ block(20L, 100 until 151))
+      .toDF("doc_id", "h")
+    val got = FingerprintDedup.cappedPairs(fps)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val want = (for (a <- 0L until 50L; b <- a + 1 until 50L) yield (a, b, 2L)).toSet
+    assert(got == want, s"${got.size} pairs, expected the ${want.size} of the 50-doc block")
+  }
+
   test("skim is deterministic and partitioning-invariant") {
     import spark.implicits._
     val docs = spark.createDataset(corpus(40)).toDF("doc_id", "text")

@@ -9,7 +9,7 @@ import graft.sources.WebPagesGen
 
 /** Seeded property sweeps (SURVEY §5 item 3). Deterministic generators via
   * counter-based hashing — reproducible without a ScalaCheck shrink cycle. */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   private def randomMentions(trial: Int): Vector[Mention] = {
     val n = 5 + Hashing.uniformInt(40, 1L, trial)
@@ -73,6 +73,28 @@ class PropertySpec extends AnyFunSuite {
       import scala.jdk.CollectionConverters._
       assert(m.iterator.toMap == ref.asScala.toMap, s"trial $trial")
     }
+  }
+
+  test("sharedKeyPairs == in-memory brute force over random blocks at maxBlock = 3") {
+    import spark.implicits._
+    // 300 keys, each held by 1 to 4 distinct ids out of 40, so blocks on
+    // both sides of the cap occur and many pairs share several keys
+    val entries = (0 until 300).flatMap { k =>
+      val size = 1 + Hashing.uniformInt(4, 31L, k)
+      (0 until 40).sortBy(i => Hashing.hash64(32L, k, i)).take(size)
+        .map(id => Blocking.BlockEntry(k.toLong, id.toLong))
+    }
+    val got = Blocking.sharedKeyPairs(spark, spark.createDataset(entries).repartition(4), 3)
+      .as[(Long, Long, Long)].collect().sorted.toSeq
+    val want = entries.groupBy(_.key).values.map(_.map(_.id).sorted)
+      .filter(ids => ids.length >= 2 && ids.length <= 3)
+      .flatMap(ids => ids.combinations(2).map(p => (p(0), p(1))))
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+      .map { case ((a, b), n) => (a, b, n) }.toSeq.sorted
+    assert(got == want)
+    val sizes = entries.groupBy(_.key).values.map(_.length).toSet
+    assert(sizes == Set(1, 2, 3, 4), s"block sizes $sizes miss a side of the cap")
+    assert(want.exists(_._3 >= 2), "no pair shares two keys")
   }
 
   test("every cluster variant shares >=1 blocking key with its base (blocking recall)") {

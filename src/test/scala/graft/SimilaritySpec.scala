@@ -35,10 +35,10 @@ class SimilaritySpec extends AnyFunSuite {
     assert(sortedJaccard(Array(1L, 2L, 3L), Array(2L, 3L, 4L)) == 0.5)
     assert(sortedJaccard(Array.empty[Long], Array.empty[Long]) == 1.0)
     val cos = sparseCosine(
-      Array(1L, 2L), Array(1.0, 1.0),
-      Array(1L, 2L), Array(1.0, 1.0))
+      Array(1L, 2L), Array(1.0f, 1.0f),
+      Array(1L, 2L), Array(1.0f, 1.0f))
     assert(math.abs(cos - 1.0) < 1e-12)
-    assert(sparseCosine(Array(1L), Array(1.0), Array(2L), Array(1.0)) == 0.0)
+    assert(sparseCosine(Array(1L), Array(1.0f), Array(2L), Array(1.0f)) == 0.0)
   }
 
   test("denseCosine") {
